@@ -5,7 +5,8 @@ re-expressed as composable pure functions over DataFrames:
 
     normalize_rounds -> explode_locations -> derive_timestamps ->
     enrich_dates -> derive_nine_number -> finalize_flags ->
-    dedup_fixes -> split_coordinates -> write (replace_partitions)
+    dedup_fixes -> land_fixes (flag, persist, replace_partitions,
+    quarantine)
 
 Defining rule: NO DATA LOSS (SURVEY §7.4 trap 3).  Padding rows are kept
 and flagged, NULL timestamps are kept and flagged, invalid coordinates
@@ -23,6 +24,17 @@ the reference's DELETE WHERE (course_id, ingest_date) + append contract
 ingest touching the same event_date (late fixes, cross-midnight rounds,
 the per-course NULL-event_date partition) would silently delete the
 earlier ingest's rows.
+
+The landing is one pass: `land_fixes` flags invalid coordinates,
+persists the flagged rows and lets the fact write evaluate the
+transform once, counting valid and invalid rows on the way; the
+quarantine write reads the cached rows.  Plan building is cheap too:
+each step builds its columns with one `withColumns`/`select` and at most
+one schema fetch (each is a JVM round trip, and a chain of ~30
+`withColumn` calls re-analyses a growing plan at every link).  The
+cache holds one course-day, or one streaming micro-batch, and its
+storage level spills to disk.  A JSON course-day refresh starts at most
+7 Spark jobs (see `run_silver`).
 """
 
 from __future__ import annotations
@@ -30,7 +42,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -94,24 +106,21 @@ def normalize_rounds(
     transform over every (course, date) slice at once instead of
     serializing per pair.
     """
-    # round_id from _id (string) or _id.$oid (Mongo)
-    if "_id" in df.columns:
-        round_id = safe_col(df, "_id").cast("string")
-    else:
-        round_id = F.lit(None).cast("string")
+    schema = df.schema
     cid = course_id if isinstance(course_id, Column) else F.lit(course_id)
     idate = ingest_date if isinstance(ingest_date, Column) else F.lit(ingest_date)
-    out = (
-        df.withColumn("round_id", round_id)
-        .withColumn("course_id", cid)
-        .withColumn("ingest_date", idate)
-        .withColumn("round_start_time", F.to_timestamp(safe_col(df, "startTime")))
-        .withColumn("round_end_time", F.to_timestamp(safe_col(df, "endTime")))
-    )
+    cols = {
+        # round_id from _id (string) or _id.$oid (Mongo)
+        "round_id": safe_col(schema, "_id").cast("string"),
+        "course_id": cid,
+        "ingest_date": idate,
+        "round_start_time": F.to_timestamp(safe_col(schema, "startTime")),
+        "round_end_time": F.to_timestamp(safe_col(schema, "endTime")),
+    }
     for src, dst, cast in _ROUND_FIELDS:
-        col = safe_col(df, src)
-        out = out.withColumn(dst, col.cast(cast) if cast else col)
-    return out
+        col = safe_col(schema, src)
+        cols[dst] = col.cast(cast) if cast else col
+    return df.withColumns(cols)
 
 
 def _loc_struct_json() -> Column:
@@ -129,13 +138,13 @@ def _loc_struct_json() -> Column:
     return F.struct(*fields)
 
 
-def _loc_struct_csv(df: DataFrame, i: int) -> Column:
-    """Location struct for CSV slot i; absent columns become NULL
-    (reference etl.py:353-384)."""
+def _loc_struct_csv(columns: set[str], i: int) -> Column:
+    """Location struct for CSV slot i of a frame with `columns`; absent
+    columns become NULL (reference etl.py:353-384)."""
 
     def get(suffix: str) -> Column:
         name = f"locations[{i}].{suffix}"
-        return bracket_col(name) if name in df.columns else F.lit(None)
+        return bracket_col(name) if name in columns else F.lit(None)
 
     fields = [F.lit(i).alias("location_index")]
     for src, dst, cast, round3 in _LOC_FIELDS:
@@ -164,10 +173,12 @@ def explode_locations(df: DataFrame, raw: DataFrame, fmt: str) -> DataFrame:
             .drop("locations", "loc", "location_index")
         )
     else:
-        idxs = discover_location_indices(raw.columns)
+        columns = raw.columns
+        idxs = discover_location_indices(columns)
         if not idxs:
             raise ValueError("no locations[i].startTime columns in CSV input")
-        structs = [_loc_struct_csv(raw, i) for i in idxs]
+        present = set(columns)
+        structs = [_loc_struct_csv(present, i) for i in idxs]
         exploded = df.withColumn("location", F.explode(F.array(*structs)))
     return exploded
 
@@ -185,14 +196,12 @@ def derive_timestamps(df: DataFrame) -> DataFrame:
         F.col("location.hole_number").isNull() & F.col("location.section_number").isNull()
     )
     return (
-        df.withColumn("fix_timestamp", fix_ts)
-        .withColumn("is_location_padding", padding)
-        .select(
+        df.select(
             "round_id",
             "course_id",
             "ingest_date",
-            "fix_timestamp",
-            "is_location_padding",
+            fix_ts.alias("fix_timestamp"),
+            padding.alias("is_location_padding"),
             "round_start_time",
             "round_end_time",
             *[dst for _, dst, _ in _ROUND_FIELDS],
@@ -225,12 +234,14 @@ def enrich_dates(df: DataFrame) -> DataFrame:
             2,
         ),
     )
-    return (
-        df.withColumn("round_duration_minutes", duration)
-        .withColumn("event_year", F.year("fix_timestamp"))
-        .withColumn("event_month", F.month("fix_timestamp"))
-        .withColumn("event_day", F.dayofmonth("fix_timestamp"))
-        .withColumn("event_weekday", F.dayofweek("fix_timestamp"))
+    return df.withColumns(
+        {
+            "round_duration_minutes": duration,
+            "event_year": F.year("fix_timestamp"),
+            "event_month": F.month("fix_timestamp"),
+            "event_day": F.dayofmonth("fix_timestamp"),
+            "event_weekday": F.dayofweek("fix_timestamp"),
+        }
     )
 
 
@@ -291,8 +302,8 @@ def finalize_flags(df: DataFrame) -> DataFrame:
             F.lit(")"),
         ),
     )
-    return df.withColumn("geometry_wkt", wkt).withColumn(
-        "is_timestamp_missing", F.col("fix_timestamp").isNull()
+    return df.withColumns(
+        {"geometry_wkt": wkt, "is_timestamp_missing": F.col("fix_timestamp").isNull()}
     )
 
 
@@ -322,19 +333,25 @@ def dedup_fixes(df: DataFrame) -> DataFrame:
     )
 
 
-def split_coordinates(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantined) by coordinate sanity bounds
-    (reference etl.py:590-608).  NULL coordinates are VALID (padding and
-    missing fixes are preserved); only out-of-range values quarantine."""
+def _invalid_coordinates() -> Column:
+    """Coordinate sanity predicate (reference etl.py:590-608): true for
+    out-of-range values only.  NULL coordinates are VALID (padding and
+    missing fixes are preserved), and the predicate itself is never
+    NULL, so it splits every row to exactly one side."""
     b = COORD_BOUNDS
-    invalid = (
+    return (
         F.col("longitude").isNotNull()
         & ((F.col("longitude") < b["lon_min"]) | (F.col("longitude") > b["lon_max"]))
     ) | (
         F.col("latitude").isNotNull()
         & ((F.col("latitude") < b["lat_min"]) | (F.col("latitude") > b["lat_max"]))
     )
-    flagged = df.withColumn("_invalid", invalid)
+
+
+def split_coordinates(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(valid, quarantined) by coordinate sanity bounds
+    (`_invalid_coordinates`)."""
+    flagged = df.withColumn("_invalid", _invalid_coordinates())
     return (
         flagged.filter(~F.col("_invalid")).drop("_invalid"),
         flagged.filter(F.col("_invalid")).drop("_invalid"),
@@ -358,11 +375,60 @@ def transform_rounds(
     return dedup_fixes(df)
 
 
+FACT_PARTITIONS = ["course_id", "ingest_date", "event_date"]
+
+
 @dataclass
 class SilverResult:
     rows_valid: int
     rows_quarantined: int
     table: str
+
+
+def land_fixes(
+    lake: Lakehouse, transformed: DataFrame, table: str, quarantine_table: str
+) -> tuple[int, int]:
+    """Land transformed fixes in one pass; returns (valid, quarantined).
+
+    The transform (parse, explode, dedup shuffle) runs once.  The rows
+    are flagged with `_invalid_coordinates` and persisted; the fact
+    write is the one action that evaluates them, filling the cache and
+    an Observation that counts all rows and invalid rows on the way (the
+    reference counts during its write too, etl.py:688-703).  The
+    quarantine table is then overwritten from the cached rows, only
+    when a row is invalid.  The fact write is the idempotent partition
+    rewrite: ingest_date in the partition spec scopes it to the
+    reference's (course_id, ingest_date) key (see module docstring).
+    The cache is released on every way out, failed writes included.
+    """
+    obs = Observation()
+    flagged = (
+        transformed.withColumn("_invalid", _invalid_coordinates())
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.col("_invalid")).alias("n_invalid"),
+        )
+        .persist()
+    )
+    try:
+        lake.replace_partitions(
+            table,
+            lake.align_to_schema(flagged.filter(~F.col("_invalid")), FACT_TELEMETRY_EVENT),
+            FACT_PARTITIONS,
+        )
+        counts = obs.get
+        n_invalid = int(counts["n_invalid"])
+        if n_invalid:
+            lake.write_partitioned(
+                quarantine_table,
+                lake.align_to_schema(flagged.filter(F.col("_invalid")), FACT_TELEMETRY_EVENT),
+                ["course_id", "ingest_date"],
+                mode="overwrite",
+            )
+    finally:
+        flagged.unpersist()
+    return int(counts["n"]) - n_invalid, n_invalid
 
 
 def run_silver(
@@ -374,36 +440,24 @@ def run_silver(
     run_id: str = "run",
     table: str = "silver.fact_telemetry_event",
 ) -> SilverResult:
-    """End-to-end silver ingest with idempotent partition rewrite and
-    quarantine sink (reference etl.py:619-703 compressed into
-    replace_partitions + a quarantine table)."""
+    """End-to-end silver ingest of one course-day with idempotent
+    partition rewrite and quarantine sink (reference etl.py:619-703
+    compressed into `land_fixes`).
+
+    One pass: the bronze files are listed without a Spark job, parsed
+    once (one schema-inference job for JSON, one header job per CSV
+    file), and the transform is evaluated once by `land_fixes`.  A JSON
+    course-day starts at most 7 Spark jobs: schema inference (1); the
+    dedup shuffle, the cache fill, the write shuffle and the write of
+    the fact (4); the write shuffle and the write of the quarantine
+    table, only when a row is invalid (2).  The counts come from that
+    one pass, never from a re-read of the written tables."""
     from .sources.bronze import read_rounds
 
     raw, fmt = read_rounds(spark, input_path)
     topology = lake.read("silver.dim_facility_topology") if lake.exists("silver.dim_facility_topology") else None
     transformed = transform_rounds(raw, fmt, course_id, ingest_date, topology)
-    valid, invalid = split_coordinates(transformed)
-
-    valid = lake.align_to_schema(valid, FACT_TELEMETRY_EVENT)
-    n_invalid = invalid.count()
-    if n_invalid:
-        lake.write_partitioned(
-            f"quarantine.{run_id}",
-            lake.align_to_schema(invalid, FACT_TELEMETRY_EVENT),
-            ["course_id", "ingest_date"],
-            mode="overwrite",
-        )
-    # Count via an Observation riding the write action itself — one scan,
-    # no post-write re-read (the reference counts during its write too,
-    # etl.py:688-703).
-    from pyspark.sql import Observation
-
-    obs = Observation(f"silver_{run_id}")
-    valid = valid.observe(obs, F.count(F.lit(1)).alias("n_valid"))
-    # ingest_date in the partition spec scopes the idempotent rewrite to
-    # the reference's (course_id, ingest_date) key — see module docstring.
-    lake.replace_partitions(table, valid, ["course_id", "ingest_date", "event_date"])
-    n_valid = int(obs.get["n_valid"])
+    n_valid, n_invalid = land_fixes(lake, transformed, table, f"quarantine.{run_id}")
 
     # Per-run observability document (reference etl.py:688-703 field
     # names), landed beside the tables so the run history is itself a

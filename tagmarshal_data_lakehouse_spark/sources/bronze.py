@@ -32,16 +32,30 @@ def bracket_col(name: str) -> Column:
     return F.col(f"`{name}`")
 
 
+def glob_paths(spark: SparkSession, pattern: str) -> list[str]:
+    """Sorted paths matching a Hadoop glob, hidden (`_*`, `.*`) names
+    skipped as Spark's file index skips them.  One
+    `FileSystem.globStatus` metadata call: it works on any Hadoop FS
+    (local, HDFS, s3a) and starts no Spark job."""
+    jvm = spark.sparkContext._jvm
+    glob = jvm.org.apache.hadoop.fs.Path(pattern)
+    fs = glob.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    # globStatus returns null (not an empty array) for a missing plain path
+    statuses = fs.globStatus(glob) or []
+    return sorted(
+        s.getPath().toString()
+        for s in statuses
+        if not s.getPath().getName().startswith(("_", "."))
+    )
+
+
 def detect_format(spark: SparkSession, path: str) -> str:
-    """CSV vs JSON probe via binaryFile listing (reference etl.py:40-61):
-    cheap (file metadata only, limit 1) and works on any Hadoop FS."""
+    """CSV vs JSON probe by file listing (reference etl.py:40-61): file
+    metadata only, no Spark job."""
     for fmt in ("json", "csv"):
         probe = path if path.endswith(f".{fmt}") else f"{path}/*.{fmt}"
-        try:
-            if spark.read.format("binaryFile").load(probe).limit(1).count() > 0:
-                return fmt
-        except Exception:
-            continue
+        if glob_paths(spark, probe):
+            return fmt
     return "csv"
 
 
@@ -65,12 +79,9 @@ def read_rounds_csv(spark: SparkSession, path: str) -> DataFrame:
 
     Scale note: the per-file loop builds the LOGICAL plan per file; the
     reads still execute as parallel Spark tasks.  File listing collects
-    paths only (metadata, not data)."""
+    paths only (metadata, not data, and no Spark job)."""
     csv_path = path if path.endswith(".csv") else f"{path}/*.csv"
-    listed = (
-        spark.read.format("binaryFile").load(csv_path).select("path").distinct().collect()
-    )
-    files = sorted(r["path"] for r in listed)
+    files = glob_paths(spark, csv_path)
     if not files:
         raise ValueError(f"no CSV files at {csv_path}")
     out: DataFrame | None = None
@@ -92,17 +103,19 @@ def read_rounds(spark: SparkSession, path: str) -> tuple[DataFrame, str]:
     return df, fmt
 
 
-def safe_col(df: DataFrame, name: str) -> Column:
-    """Reference a possibly-Mongo-wrapped field, tolerating absence.
+def safe_col(schema: T.StructType, name: str) -> Column:
+    """Reference a possibly-Mongo-wrapped field of a frame with `schema`,
+    tolerating absence.
 
     `{"$oid": …}` / `{"$date": …}` wrappers vary per export file;
     referencing a missing struct subfield is a planning-time error, so
     the candidates are chosen by schema introspection
-    (reference etl.py:217-243).
+    (reference etl.py:217-243).  Callers fetch the schema once and pass
+    it: each `DataFrame.schema` call is a round trip to the JVM.
     """
-    if name not in df.columns:
+    if name not in schema.names:
         return F.lit(None)
-    dtype = df.schema[name].dataType
+    dtype = schema[name].dataType
     if isinstance(dtype, T.StructType):
         subfields = {f.name for f in dtype.fields}
         candidates = [

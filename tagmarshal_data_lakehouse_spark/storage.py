@@ -217,13 +217,17 @@ class Lakehouse:
     def align_to_schema(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Project df onto `schema`: cast known columns, null-fill missing,
         drop unknown extras (the reference's pre-append alignment,
-        etl.py:654-673)."""
+        etl.py:654-673).  A column that already has its declared type is
+        passed through uncast: every Column call is a JVM round trip, and
+        a fact row has ~50 fields."""
+        have = {f.name: f.dataType for f in df.schema.fields}
         cols = []
         for field in schema.fields:
-            if field.name in df.columns:
-                cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
+            if have.get(field.name) == field.dataType:
+                cols.append(F.col(field.name))
             else:
-                cols.append(F.lit(None).cast(field.dataType).alias(field.name))
+                src = F.col(field.name) if field.name in have else F.lit(None)
+                cols.append(src.cast(field.dataType).alias(field.name))
         return df.select(*cols)
 
     @staticmethod

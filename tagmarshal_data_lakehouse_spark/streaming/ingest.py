@@ -8,10 +8,11 @@ Design (Spark-first, SURVEY §7.2 M7):
 - course_id / ingest_date are recovered distributively from the file
   path via the `_metadata.file_path` hidden column — no driver-side
   listing;
-- `foreachBatch` reuses the exact batch transform (transform_rounds),
-  so streaming and batch silver rows are byte-identical — the batch
-  path IS the semantics, streaming only changes arrival;
-- each micro-batch ends in replace_partitions on (course_id,
+- `foreachBatch` reuses the exact batch transform (transform_rounds)
+  and landing (land_fixes), so streaming and batch silver rows are
+  byte-identical — the batch path IS the semantics, streaming only
+  changes arrival;
+- each micro-batch ends in land_fixes' replace_partitions on (course_id,
   ingest_date, event_date), the same idempotent rewrite the batch
   ingest uses, so replays from the checkpoint cannot duplicate rows
   (exactly-once sink effect on top of at-least-once foreachBatch) and
@@ -29,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import FACT_TELEMETRY_EVENT
-from ..silver import split_coordinates, transform_rounds
+from ..silver import land_fixes, transform_rounds
 from ..storage import Lakehouse
 
 _COURSE_RE = r"course_id=([^/]+)"
@@ -64,16 +64,7 @@ def _process_batch(lake: Lakehouse, table: str, topology: DataFrame | None):
             F.regexp_extract(F.col("_path"), _DATE_RE, 1),
             topology,
         )
-        valid, invalid = split_coordinates(out)
-        valid = lake.align_to_schema(valid, FACT_TELEMETRY_EVENT)
-        if not invalid.isEmpty():
-            lake.write_partitioned(
-                f"quarantine.stream_batch_{batch_id}",
-                lake.align_to_schema(invalid, FACT_TELEMETRY_EVENT),
-                ["course_id", "ingest_date"],
-                mode="overwrite",
-            )
-        lake.replace_partitions(table, valid, ["course_id", "ingest_date", "event_date"])
+        land_fixes(lake, out, table, f"quarantine.stream_batch_{batch_id}")
 
     return inner
 

@@ -215,3 +215,65 @@ def test_cross_ingest_date_rows_preserved(spark, fixture_dir, tmp_path):
         spark, lake, f"{fixture_dir}/json_plain", "americanfalls", "2024-01-17"
     )
     assert lake.read("silver.fact_telemetry_event").count() == 2 * n_first
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+@pytest.mark.parametrize(
+    "fixture,course",
+    [
+        ("json_plain", "americanfalls"),
+        ("json_mongo", "bradshawfarmgc"),
+        ("csv_ragged", "indiancreek"),
+    ],
+)
+def test_run_silver_one_pass_landing(spark, fixture_dir, tmp_path, fixture, course):
+    """run_silver evaluates the transform once per course-day: at most 7
+    Spark jobs (the three-pass landing took 12), the counts of
+    split_coordinates on the same input, no quarantine table when no row
+    is invalid, and no persisted RDD left behind."""
+    sc = spark.sparkContext
+    path = f"{fixture_dir}/{fixture}"
+    raw, fmt = bronze.read_rounds(spark, path)
+    valid, invalid = silver.split_coordinates(
+        silver.transform_rounds(raw, fmt, course, "2024-01-16", None)
+    )
+    want = (valid.count(), invalid.count())
+    before = _persisted_rdds(spark)
+
+    lake = Lakehouse(spark, str(tmp_path / "warehouse"))
+    group = f"one_pass_{fixture}"
+    sc.setJobGroup(group, group)
+    try:
+        res = silver.run_silver(spark, lake, path, course, "2024-01-16", run_id="t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+
+    assert len(jobs) <= 7, sorted(jobs)
+    assert (res.rows_valid, res.rows_quarantined) == want
+    assert lake.read(res.table).count() == want[0]
+    assert lake.exists("quarantine.t") == (want[1] > 0)
+    assert _persisted_rdds(spark) == before
+
+
+def test_run_silver_releases_cache_on_failed_write(
+    spark, fixture_dir, tmp_path, monkeypatch
+):
+    """A write that fails after the transform was cached still leaves no
+    persisted RDD behind."""
+    lake = Lakehouse(spark, str(tmp_path / "warehouse"))
+
+    def failing_write(table, df, partition_by, files_per_partition=1):
+        df.count()  # fills the cache, as the real write does
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(lake, "replace_partitions", failing_write)
+    before = _persisted_rdds(spark)
+    with pytest.raises(RuntimeError, match="write failed"):
+        silver.run_silver(
+            spark, lake, f"{fixture_dir}/json_mongo", "bradshawfarmgc", "2024-02-01"
+        )
+    assert _persisted_rdds(spark) == before
