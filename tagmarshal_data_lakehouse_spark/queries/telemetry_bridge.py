@@ -1294,9 +1294,7 @@ q_gold_dim_course = Query(
 
 
 # ---------------------------------------------------------------------------
-# R8 batch 2: the highest-traffic pytest-only dashboard queries get
-# driver rows (round-7 verdict item 6 — begin rotating the telemetry
-# library through the driver at 3-5 per round).  Same bridge, same
+# The highest-traffic dashboard-library queries.  Same bridge, same
 # pattern: the REAL library text runs on Spark; the oracle re-spells it
 # in DuckDB's dialect over _DUCK_BRIDGE.  Hash-risky columns (ROUND on
 # arbitrary doubles, percentile sketches) are projected away in the
@@ -1550,17 +1548,11 @@ QUERIES = [
 
 
 # ---------------------------------------------------------------------------
-# R8-STAGED entries: driver rows for the remaining gold/silver_normalized
-# models (signal_quality_rounds, course_configuration_analysis,
+# Driver rows for the remaining gold/silver_normalized models
+# (signal_quality_rounds, course_configuration_analysis,
 # critical_column_gaps, dim_round, dim_device, fact_telemetry_fix,
 # global_overview, global_course_summary, global_time_patterns — reference
-# pipeline/gold/models/{gold,silver_normalized}/*.sql).  Staged through
-# round 7 (the rotation's due-queue overflow sat at exactly PRIORITY_SLOTS,
-# so registering them then would have broken the one-round-of-lag bound
-# tests/test_registry_order.py enforces) and PROMOTED in round 8: appended
-# to QUERIES below, slotted into the sweep head as never-green entries, and
-# recorded in the oracle-text ledger.  tests/test_gold_bridge_staged.py
-# keeps running the driver-sim compare on the block.
+# pipeline/gold/models/{gold,silver_normalized}/*.sql).
 # ---------------------------------------------------------------------------
 
 # The silver_normalized models consume columns the base bridge does not
@@ -2282,12 +2274,7 @@ q_gold_fact_telemetry_fix = Query(
     "driver-hashed at event grain.",
 )
 
-# Promoted in round 8 (kept as a named block so the staged-entry pytest
-# matrix and driver_sim's SIM_STAGED hook keep working; the names are
-# also appended to QUERIES below, which registers them for the driver
-# sweep — the round-7 overflow bound that forced the staging has lapsed
-# with the round-8 rotation).
-R8_STAGED = [
+QUERIES += [
     q_gold_signal_quality_rounds,
     q_gold_course_configuration,
     q_gold_critical_column_gaps,
@@ -2299,10 +2286,7 @@ R8_STAGED = [
     q_gold_fact_telemetry_fix,
 ]
 
-QUERIES += R8_STAGED
-
-# R8 batch 2 (defined above, before the main list): dashboard-library
-# texts promoted to driver rows this round.
+# Dashboard-library texts defined above, before the main list.
 QUERIES += [
     q_telemetry_round_progression,
     q_telemetry_progression_summary,
@@ -2312,14 +2296,8 @@ QUERIES += [
 
 
 # ---------------------------------------------------------------------------
-# R9-STAGED entries: the next dashboard-library batch (VERDICT r7 item 6 —
-# rotate the pytest-only telemetry library onto driver rows at a few per
-# round).  Built in round 8 (round 8's sweep head was already full and
-# never-green entries must sit inside it, tests/test_registry_order.py),
-# held to the exact driver standard by tests/test_telemetry_bridge_staged.py
-# and driver_sim's SIM_STAGED hook, PROMOTED in round 9 per the mechanical
-# checklist (QUERIES append below, sweep-head slots in queries/__init__.py,
-# oracle texts ledgered via tools/update_query_text_hashes.py --round 9).
+# Dashboard-library batch: section pace, bottlenecks, the global
+# weekday/hourly/monthly distributions, completion and validation.
 #
 # Exactness per the standing rules: ROUND(double, N>0) percentage/average
 # columns and engine-specific percentile sketches leave the hashed
@@ -2580,7 +2558,7 @@ q_telemetry_round_validation_summary = Query(
 )
 
 
-R9_STAGED = [
+QUERIES += [
     q_telemetry_pace_by_section,
     q_telemetry_bottleneck_summary,
     q_telemetry_global_weekday_heatmap,
@@ -2590,19 +2568,10 @@ R9_STAGED = [
     q_telemetry_round_validation_summary,
 ]
 
-# Promoted in round 9 per the mechanical checklist (VERDICT r8 item 4);
-# the block name stays so the staged-entry pytest matrix and
-# driver_sim's SIM_STAGED hook keep working.
-QUERIES += R9_STAGED
-
 
 # ---------------------------------------------------------------------------
-# R10-STAGED entries: the third dashboard-library batch (VERDICT r7 item 6
-# rotation, continued).  Built and oracle'd in round 8, held to the exact
-# driver standard by tests/test_telemetry_bridge_staged.py (generic over
-# every unregistered R{N}_STAGED block) and driver_sim's SIM_STAGED hook;
-# promoted in round 9 together with R9_STAGED (VERDICT r8 item 7: the
-# sweep head had room after the hard-due entries, so two blocks land).
+# Dashboard-library batch: overview stats, pace/duration/device tables
+# and the calendar distributions.
 #
 # Exactness: this batch RETAINS the library's ROUND(avg)/ROUND(pct) display
 # columns in the hashed projection by mirroring Spark's ROUND semantics in
@@ -2995,7 +2964,7 @@ q_telemetry_events_per_course = Query(
 )
 
 
-R10_STAGED = [
+QUERIES += [
     q_telemetry_overview_stats,
     q_telemetry_pace_by_hole,
     q_telemetry_round_duration_summary,
@@ -3008,12 +2977,9 @@ R10_STAGED = [
     q_telemetry_events_per_course,
 ]
 
-# Promoted in round 9 (see the R9_STAGED note above).
-QUERIES += R10_STAGED
-
 
 # ---------------------------------------------------------------------------
-# R11-STAGED entries: the fourth dashboard-library batch — the global
+# Dashboard-library batch: the global
 # comparison tab and the data-quality family.  Two new bridge VARIANTS
 # unlock texts the base bridge could not exercise (both are NEW wrapper
 # texts; the green base/EXT strings stay byte-identical):
@@ -3029,7 +2995,7 @@ QUERIES += R10_STAGED
 #   (current_hole / current_hole_section, fresh primes 71/73 for their
 #   NULL stripes).
 #
-# Exactness per the R10 rules: decimal-literal pct columns hash as
+# Exactness per the _duck_round rules: decimal-literal pct columns hash as
 # DOUBLEs (cast both sides), ROUNDed averages go through _duck_round,
 # engine-specific percentile sketches and two composite decimal-
 # division chains (quality_score and the ranking's avg_quality_score,
@@ -3386,7 +3352,7 @@ q_telemetry_padding_analysis = Query(
 )
 
 
-R11_STAGED = [
+QUERIES += [
     q_telemetry_course_summary,
     q_telemetry_infrastructure_stats,
     q_telemetry_column_completeness,
@@ -3398,17 +3364,9 @@ R11_STAGED = [
     q_telemetry_padding_analysis,
 ]
 
-# Promoted in round 9 (second wave, with R12): after the hole_duration
-# fix and the R9/R10 promotion, the head's 20 soft slots were on stale
-# refresh — filling the ENTIRE 38-slot priority block with never-green
-# entries instead maximizes first-row coverage per sweep (the 13
-# r03-vintage stale entries lead the tail, within the gate's
-# one-round-lag bound, and come due again at round 10).
-QUERIES += R11_STAGED
-
 
 # ---------------------------------------------------------------------------
-# R12-STAGED entries: the fifth dashboard-library batch — the exploration
+# Dashboard-library batch: the exploration
 # notebook family (`expl_*`: exploration/*.sql in the reference, served by
 # run_telemetry_query).  Three of them read GOLD MODEL tables rather than
 # the fact: `_expl_on_model` materializes the model's real chain over the
@@ -3422,7 +3380,7 @@ QUERIES += R11_STAGED
 # decimal but down through a raw double round; the shortest-decimal idiom
 # recovers the exact value).  Composite multi-ratio scores summed from
 # per-ratio divisions (overall_completeness_score) are shimmed, same class
-# as R11's quality_score.
+# as telemetry_data_quality_score's quality_score.
 # ---------------------------------------------------------------------------
 
 
@@ -3519,7 +3477,7 @@ q_telemetry_expl_column_completeness = Query(
     doc="Reference parity, the exploration notebook's quick "
     "completeness scan (expl_column_completeness) — five pct columns "
     "hash as DOUBLEs (distinct from the dashboard's 11-column "
-    "column_completeness text, R11).",
+    "column_completeness text).",
 )
 
 _DCS_PCTS = [
@@ -3539,7 +3497,7 @@ _DCS_PCTS = [
 q_telemetry_expl_data_completeness_summary = Query(
     name="telemetry_expl_data_completeness_summary",
     # Registry shim: overall_completeness_score sums four per-ratio
-    # decimal divisions before its ROUND — the R11 quality_score
+    # decimal divisions before its ROUND — the quality_score
     # composite class, where engine decimal-vs-double chains diverge.
     build=lambda spark, sf_dir: _cast_cols(
         _bridged(spark, sf_dir, "expl_data_completeness_summary").drop(
@@ -3787,7 +3745,7 @@ q_telemetry_expl_critical_gaps = Query(
 )
 
 
-R12_STAGED = [
+QUERIES += [
     q_telemetry_expl_executive_summary,
     q_telemetry_expl_battery_analysis,
     q_telemetry_expl_column_completeness,
@@ -3801,12 +3759,9 @@ R12_STAGED = [
     q_telemetry_expl_critical_gaps,
 ]
 
-# Promoted in round 9 (see the R11_STAGED note above).
-QUERIES += R12_STAGED
-
 
 # ---------------------------------------------------------------------------
-# R13-STAGED entries: the sixth dashboard-library batch — the
+# Dashboard-library batch: the
 # examples/common_queries.sql family (`ex_*`) and the remaining
 # null-patterns texts.  Two library texts are deliberately NOT bridged
 # (each would verify nothing real against this bridge):
@@ -3977,7 +3932,7 @@ q_telemetry_np_quality_report = Query(
 )
 
 
-R13_STAGED = [
+QUERIES += [
     q_telemetry_ex_events_by_course,
     q_telemetry_ex_rounds_by_course,
     q_telemetry_ex_events_by_date,
@@ -3987,13 +3942,9 @@ R13_STAGED = [
     q_telemetry_np_quality_report,
 ]
 
-# Promoted in round 10 (rotate_head --round 10: 17 hard + 13 r03 stale
-# fill 30/38 priority slots, overflow 0 — see queries/__init__.py).
-QUERIES += R13_STAGED
-
 
 # ---------------------------------------------------------------------------
-# R14-STAGED entries: the seventh dashboard-library batch — the demo
+# Dashboard-library batch: the demo
 # notebook family (`demo_*`) and the dimension-reading texts.  Three
 # deterministic DIM views (identical SQL text both engines) stand in for
 # tables the bridge did not carry:
@@ -4294,7 +4245,7 @@ q_telemetry_demo_bottom3_months = Query(
 )
 
 
-R14_STAGED = [
+QUERIES += [
     q_telemetry_demo_data_volume,
     q_telemetry_demo_topology_rows,
     q_telemetry_topology,
@@ -4307,12 +4258,9 @@ R14_STAGED = [
     q_telemetry_demo_bottom3_months,
 ]
 
-# Promoted in round 10 together with R13_STAGED (see the note above).
-QUERIES += R14_STAGED
-
 
 # ---------------------------------------------------------------------------
-# R15-STAGED entries: the eighth dashboard-library batch — the
+# Dashboard-library batch: the
 # PARAMETERIZED per-course drill-down family (`get_*`, rendered through
 # telemetry.PARAMETERIZED's _exact_avg_std rewrite exactly as
 # run_telemetry_query serves them) plus the remaining fixed texts.
@@ -4331,7 +4279,7 @@ QUERIES += R14_STAGED
 #   by telemetry_pace_by_section (sample floors) and agg_having.
 # (get_check_loop_fatigue, formerly on this list, WAS bridged once
 # _expl_on_model accepted parameters — q_telemetry_check_loop_fatigue
-# in the R16 appendix below.)
+# below.)
 # The full 7-skip census lives in OPERATORS.md §"Bridge census" — keep
 # the two in sync when a skip is added or bridged.
 # ---------------------------------------------------------------------------
@@ -4859,7 +4807,7 @@ q_telemetry_column_completeness_extended = Query(
 )
 
 
-R15_STAGED = [
+QUERIES += [
     q_telemetry_pace_by_hole_course,
     q_telemetry_pace_by_section_course,
     q_telemetry_round_sample,
@@ -4874,22 +4822,14 @@ R15_STAGED = [
     q_telemetry_course_summary_with_profile,
     q_telemetry_column_completeness_extended,
 ]
-# Promoted in round 10's second wave together with R16_STAGED (the
-# round-9 two-wave precedent): all 18 entries sim-PASS under the
-# class-checking harness, and rotate_head --round 10 --promote
-# R15_STAGED R16_STAGED fills 38/38 head slots with overflow 10 —
-# the 10 displaced r03-vintage stale entries lead _STALE_TAIL and fit
-# round 11's queue (10 + 27 r05-vintage = 37 <= 38).
-QUERIES += R15_STAGED
 
 
 # ---------------------------------------------------------------------------
-# R16-STAGED entries: the ninth (and, for the bridgeable surface, FINAL)
-# dashboard-library batch — the four remaining fixed texts, the
+# The last dashboard-library batch — the four remaining fixed texts, the
 # all-courses faces of already-green per-course drill-downs, plus the
 # appendix entry below.  With this block every library text is either
 # driver-bridged (87/94) or skipped with a measured reason recorded in
-# the R13/R14/R15 block comments (7/94: structurally-empty matches,
+# the ex_*, demo_* and get_* batch comments (7/94: structurally-empty matches,
 # tie-arbitrary LIMIT cuts, and one data-dependent parameter).
 # ---------------------------------------------------------------------------
 
@@ -5007,7 +4947,7 @@ q_telemetry_rounds_by_month = Query(
 )
 
 
-R16_STAGED = [
+QUERIES += [
     q_telemetry_round_duration_details,
     q_telemetry_round_nine_combinations,
     q_telemetry_round_validation,
@@ -5015,13 +4955,12 @@ R16_STAGED = [
 ]
 
 
-# R16 appendix: the last skip from the R15 census, un-skipped — the
+# The last skip from the get_* census, un-skipped — the
 # param-aware _expl_on_model made the model-reading parameterized
 # wrapper trivial after all.  Same nine-collapse caveat as
 # telemetry_demo_loop_fatigue (hole 5 -> nine 1 only on this bridge);
 # the avg-of-avgs decimal cast (CAST(avg_pace_sec AS DECIMAL(28,10))
-# over a non-integer double) is the one new exactness surface, held to
-# the three-SF staged gate like everything else.
+# over a non-integer double) is the one new exactness surface.
 q_telemetry_check_loop_fatigue = Query(
     name="telemetry_check_loop_fatigue",
     build=lambda spark, sf_dir: _expl_on_model(
@@ -5052,49 +4991,20 @@ q_telemetry_check_loop_fatigue = Query(
     "driver-grade row.",
 )
 
-R16_STAGED = R16_STAGED + [q_telemetry_check_loop_fatigue]
-# Promoted in round 10's second wave (see the R15_STAGED note above) —
-# with this append every bridgeable reference library text (87/94) is
-# REGISTERED; the 7 skips remain the measured census in OPERATORS.md.
-QUERIES += R16_STAGED
+# With this append every bridgeable reference library text (87/94) is
+# registered; the 7 skips remain the measured census in OPERATORS.md.
+QUERIES += [q_telemetry_check_loop_fatigue]
 
 
-# --- R17_STAGED: round-11 promotion queue (NOT telemetry texts) -------
-#
-# The library surface is complete (R16 note above), so staging moves to
-# engine-extension entries. These two live in their home modules
-# (events_ops.py / training/queries.py) and are only QUEUED here because
-# the staged-pipeline machinery — driver_sim SIM_STAGED discovery, the
-# staged pytest gate (tests/test_telemetry_bridge_staged.py), and the
-# rotation gate's promotion arithmetic — scans R{N}_STAGED blocks in
-# THIS module. The round-10 sweep head is full (38/38, overflow 10), so
-# a never-green registration must wait for the round-11 rotation; until
-# then both entries are held to the driver's exact oracle standard by
-# the staged suite. Promotion checklist: the module-head playbook
-# (QUERIES append + sweep-head slots + ledger run); move
-# events_hopping_window from _TS_STAGED into
-# test_tz_independence.TS_QUERIES (it emits NTZ window_start stamps).
+# Two engine-extension entries live in their home modules but register
+# through this list, and the rollup-combine pipelines for
+# global_overview and dim_device close it.
 from .events_ops import q_events_hopping_window
 from ..training.queries import q_doc_source_token_diversity
 
-R17_STAGED = [
+QUERIES += [
     q_events_hopping_window,
     q_doc_source_token_diversity,
+    q_gold_global_overview_rollup,
+    q_gold_dim_device_rollup,
 ]
-# Promoted in round 11 per the mechanical checklist above (VERDICT r10
-# item 1): both entries lead the round-11 sweep head as never-green
-# hard dues; events_hopping_window moved from the staged tz gate
-# (_TS_STAGED) into test_tz_independence.TS_QUERIES.
-QUERIES += R17_STAGED
-
-# --- Round 12 registration (no staging needed): the rollup-combine ----
-# pipeline for global_overview, registered directly because the
-# round-12 head has a free slot (37 dues / 38 slots) — it takes the
-# never-green hard-due slot the r07-vintage pull-forward occupied.
-QUERIES += [q_gold_global_overview_rollup]
-
-# --- Round 13 registration: the rollup-combine pipeline for dim_device
-# (the second combiner).  Never-green -> hard due, so it takes the
-# head's first slot and pushes one r07-vintage stale (gold_dim_course)
-# into the one-round-lag overflow at the tail front.
-QUERIES += [q_gold_dim_device_rollup]

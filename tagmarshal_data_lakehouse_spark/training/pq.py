@@ -214,7 +214,7 @@ def encode(
         cases.append(f"CASE WHEN {g} >= 0 THEN {g} ELSE {exact} END")
     return (
         df.withColumn("_gcodes", _gemm_codes_udf(codebooks)(F.col(vec_col)))
-        .selectExpr("*", f"array({', '.join(cases)}) AS `{out}`")
+        .withColumn(out, F.expr(f"array({', '.join(cases)})"))
         .drop("_gcodes")
     )
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from tagmarshal_data_lakehouse_spark.queries import telemetry
+from tagmarshal_data_lakehouse_spark.queries import telemetry, telemetry_bridge
 
 _REPO = Path(__file__).resolve().parent.parent
 _BRIDGE_SRC = (
@@ -34,7 +34,8 @@ _BRIDGE_SRC = (
 ).read_text()
 
 # The 7 deliberate skips — reasons in OPERATORS.md §"Bridge census" and
-# the R13/R14/R15 block comments. Change BOTH when (un)bridging a text.
+# the ex_*, demo_* and get_* batch comments in telemetry_bridge.py.
+# Change BOTH when (un)bridging a text.
 EXPECTED_SKIPS = {
     "ex_duplicate_fix_check",       # structurally empty: 0 dup (round, ts) pairs
     "expl_np_missing_ts_by_round",  # tie-arbitrary LIMIT 20 (all counts = 1)
@@ -91,3 +92,23 @@ def test_operators_md_lists_every_skip():
     section = ops[ops.index("### Bridge census") :]
     missing = [n for n in EXPECTED_SKIPS if f"`{n}`" not in section]
     assert not missing, f"OPERATORS.md bridge-census table is missing: {missing}"
+
+
+def test_bridge_entries_cover_every_gold_model():
+    """Registered bridge entries must cover all 20 gold models. Every
+    gold bridge entry's doc cites its model as
+    'gold/models.py <MODEL_CONST>' — matched with a word boundary so a
+    prose mention of another model (e.g. 'the bridged fact_rounds
+    chain') cannot mark that model covered."""
+    from tagmarshal_data_lakehouse_spark.gold.models import MODELS
+
+    docs = [q.doc or "" for q in telemetry_bridge.QUERIES]
+    missing = [
+        m.name
+        for m in MODELS
+        if not any(
+            re.search(rf"gold/models\.py\s+{re.escape(m.name.upper())}\b", doc)
+            for doc in docs
+        )
+    ]
+    assert not missing, f"gold models without a bridge entry: {missing}"

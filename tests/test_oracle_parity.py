@@ -26,7 +26,12 @@ _ROWS_ONLY = [name for name, q in _REGISTRY.items() if q.oracle is None]
 
 @pytest.mark.parametrize("name", _ORACLE_QUERIES)
 def test_oracle_parity(spark, name):
-    problems = run_query_pair(spark, _REGISTRY[name], SF_DIR)
+    # An empty result would be a 0=0 match proving nothing: every entry
+    # must return rows here except the few SPARSE_QUERIES, which are
+    # pinned non-vacuous at a larger SF below.
+    problems = run_query_pair(
+        spark, _REGISTRY[name], SF_DIR, require_rows=name not in SPARSE_QUERIES
+    )
     assert not problems, f"{name} diverges from oracle: {problems}"
 
 
@@ -39,10 +44,8 @@ def test_rows_only_queries_run(spark, name):
 
 
 # Queries whose result is EMPTY at the default parity SF (measured by a
-# full sweep, r9): their test_oracle_parity row is a 0=0 match proving
-# nothing, so each is additionally pinned at the smallest SF where it
-# produces rows, with require_rows=True (the review-r9 finding: the
-# round's headline hole_duration fix had only vacuous pytest coverage).
+# full sweep): test_oracle_parity exempts them from require_rows, so
+# each is pinned instead at the smallest SF where it produces rows.
 # A query that later becomes non-empty at sf0.001 stays here harmlessly;
 # one that becomes empty at its listed SF fails loudly.
 SPARSE_QUERIES = {

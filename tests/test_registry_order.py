@@ -1,83 +1,28 @@
-"""Registry-order contract — the artifact-driven rotation gate.
+"""Registry bookkeeping: the oracle-text ledger and the sim artifact.
 
-The driver's correctness sweep walks ``registry()`` in insertion order
-under a ~50-entry budget, so ordering is a coverage guarantee. With N
-oracle-backed entries and 38 rotating slots per round (50 minus the 12
-flagship stripes), full coverage is a ROTATION with a best-achievable
-refresh period of ceil((N - 12) / 38) rounds — STALE_HORIZON, derived
-below from the LIVE registry so it can never drift from the arithmetic
-(round-6 ADVICE: the hand-written "139/127" constants were already
-stale at 146). This module enforces the rotation MECHANICALLY,
-computing each query's last driver-green round from the checked-in
-CORRECTNESS_r*.json artifacts and each query's edited-since-green state
-from the checked-in oracle-text ledger (QUERY_TEXT_HASHES.json,
-maintained by tools/update_query_text_hashes.py) instead of trusting
-hand-maintained lists (the round-5 failure mode: a hand-rotated head
-silently aged; the round-6 failure mode: a shared-SQL edit under 8
-green entries that the hand list never recorded). The invariants:
-
-- the flagship stripes give every family a row even under a tiny budget;
-- every oracle-backed query that has NEVER produced a driver hash row,
-  or whose oracle text changed after its last green row (ledger-derived
-  or hand-listed for builder-only edits), is inside this round's budget
-  window;
-- the due-queue (never-green + edited + green longer than STALE_HORIZON
-  rounds ago) fills the priority block oldest-first, with no slot
-  wasted on an already-fresh query;
-- whatever the queue cannot fit this round leads the tail AND fits
-  entirely into next round's priority block — the queue can never grow
-  past one round of lag (`len(overflow) <= PRIORITY_SLOTS`).
-
-No family carve-outs: the round-4/5 "stale relational slice" exemption
-is gone; relational queries rotate under the same horizon as everything
-else.
+QUERY_TEXT_HASHES.json records the sha of every oracle-backed query's
+ORACLE text (maintained by tools/update_query_text_hashes.py). Every
+oracle f-string-inlines the shared SQL it reads (bridge, fact_rounds
+CTEs, topology), so an edit to shared text changes every dependent
+oracle and shows up here as an un-recorded change. The newest
+SIM_r{N}.json must name exactly the live registry.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import re
-import sys
 from pathlib import Path
 
-from tagmarshal_data_lakehouse_spark.queries import (
-    HEAD_DESIGNED_FOR_ROUND,
-    _FLAGSHIP_INTERLEAVE,
-    _STALE_TAIL,
-    _SWEEP_PRIORITY,
-    registry,
-)
+from tagmarshal_data_lakehouse_spark.queries import registry
 
 _REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(_REPO))
-
-# The due-queue ARITHMETIC (horizon, edited-since-green, hard/soft
-# ordering) is shared with the proposal tool via tools/rotation.py
-# (ADVICE r9: two hand-kept copies could silently drift, producing
-# proposals this gate rejects). This module remains the AUTHORITATIVE
-# verifier — it checks the committed head against that arithmetic.
-from tools import rotation  # noqa: E402
-
-SWEEP_BUDGET = 50
-PRIORITY_SLOTS = SWEEP_BUDGET - len(_FLAGSHIP_INTERLEAVE)
-
-# Builder-side-only edits after a green row: the hand list is OWNED by
-# tools/rotation.py (rotation.EDITED_SINCE_GREEN) so the gate and the
-# rotate_head proposal tool can never disagree about it — record new
-# names THERE. Shared-SQL and oracle edits are detected mechanically
-# instead: every oracle f-string-inlines its shared texts, so
-# QUERY_TEXT_HASHES.json (sha of each oracle + the round its current
-# text was recorded for) flags them without hand discipline.
-_EDITED_SINCE_GREEN: frozenset[str] = rotation.EDITED_SINCE_GREEN
 
 
 def _ledger_tool():
-    # the WRITER'S oracle_sha definition, not a re-implementation: if
-    # checker and tool ever hashed differently, every entry would read
-    # as edited and the head-capacity arithmetic would become
-    # unsatisfiable
-    import importlib.util
-
+    # the writer's oracle_sha definition, not a re-implementation, so
+    # checker and tool can never hash differently
     spec = importlib.util.spec_from_file_location(
         "update_query_text_hashes", _REPO / "tools" / "update_query_text_hashes.py"
     )
@@ -89,70 +34,23 @@ def _ledger_tool():
 _oracle_sha = _ledger_tool().oracle_sha
 
 
-def _ledger() -> dict[str, dict]:
+def _ledger() -> dict[str, str]:
     return json.loads((_REPO / "QUERY_TEXT_HASHES.json").read_text())
-
-
-def _oracle_texts() -> dict[str, str]:
-    """Oracle-backed entries in registry order (the order both the
-    sweep and the due-queue's stable sort ride)."""
-    return {n: q.oracle for n, q in registry().items() if q.oracle is not None}
-
-
-def _latest_green() -> tuple[dict[str, int], int]:
-    """(latest driver-green round per query, current round number),
-    scanned from the committed CORRECTNESS_r*.json artifacts. The
-    "current" round is pinned to HEAD_DESIGNED_FOR_ROUND so a freshly
-    landed driver artifact does not redden the suite before the next
-    rotation; `test_head_design_tracks_the_artifacts` separately bounds
-    how far the marker may lag."""
-    return rotation.latest_green(_REPO), HEAD_DESIGNED_FOR_ROUND
-
-
-def _edited_since_green(latest: dict[str, int]) -> set[str]:
-    """Ledger-derived edited set: oracle text unrecorded/changed, or
-    recorded for a round no driver row has confirmed yet — plus the
-    hand list for builder-only edits."""
-    return rotation.edited_since_green(
-        _oracle_texts(), latest, _ledger(), _oracle_sha, _EDITED_SINCE_GREEN
-    )
-
-
-def _max_artifact_round() -> int:
-    return rotation.max_artifact_round(_REPO)
-
-
-def test_head_design_tracks_the_artifacts():
-    """The head layout may lag the newest driver artifact by at most
-    one round (the artifact for round N lands before round N+1's
-    rotation). Two rounds behind = a whole round passed without the
-    rotation being executed — the round-5 zero-commit failure mode this
-    gate exists to catch."""
-    assert HEAD_DESIGNED_FOR_ROUND >= _max_artifact_round(), (
-        f"head designed for round {HEAD_DESIGNED_FOR_ROUND} but "
-        f"CORRECTNESS_r{_max_artifact_round():02d}.json already exists: "
-        "rotate queries/__init__.py (_SWEEP_PRIORITY/_STALE_TAIL) and "
-        "bump HEAD_DESIGNED_FOR_ROUND"
-    )
 
 
 def test_ledger_is_current():
     """Every oracle-backed query's CURRENT oracle text must be recorded
     in QUERY_TEXT_HASHES.json. A mismatch means an oracle (or shared
-    SQL it inlines) was edited without re-recording — run
-    `python tools/update_query_text_hashes.py --round <current>`, which
-    marks the entry edited-since-green until the driver re-verifies it."""
+    SQL it inlines) was edited without re-recording."""
     ledger = _ledger()
-    stale = []
-    for name, q in registry().items():
-        if q.oracle is None:
-            continue
-        rec = ledger.get(name)
-        if rec is None or rec["sha"] != _oracle_sha(q.oracle):
-            stale.append(name)
+    stale = [
+        name
+        for name, q in registry().items()
+        if q.oracle is not None and ledger.get(name) != _oracle_sha(q.oracle)
+    ]
     assert not stale, (
         "oracle text changed without re-recording (run "
-        f"tools/update_query_text_hashes.py --round {HEAD_DESIGNED_FOR_ROUND}): {stale}"
+        f"tools/update_query_text_hashes.py): {stale}"
     )
 
 
@@ -164,146 +62,24 @@ def test_ledger_has_no_ghost_entries():
     assert not ghosts, f"ledger entries without a live oracle-backed query: {ghosts}"
 
 
-def _family(name: str) -> str:
-    if name.startswith("events_"):
-        return "events"
-    if name.startswith(("doc_", "emb_", "multimodal_")):
-        return "training"
-    if name.startswith("tpch_"):
-        return "tpch"
-    return "relational"
-
-
-def _due_queue() -> tuple[list[str], dict[str, int], int]:
-    """The ordered must-verify queue: never-green and edited first, then
-    stale entries oldest-green-round first (stable on registry order) —
-    computed by the SHARED arithmetic in tools/rotation.py."""
-    latest, current = _latest_green()
-    dq = rotation.due_queue(
-        _oracle_texts(), latest, _ledger(), _oracle_sha, current,
-        _FLAGSHIP_INTERLEAVE, PRIORITY_SLOTS, _EDITED_SINCE_GREEN,
-    )
-    return list(dq.due), latest, current
-
-
-def test_first_twelve_interleave_every_family():
-    names = list(registry())
-    # Every 4-slot stripe of the flagship block holds one query per family,
-    # so even a sweep budget of 4 yields a row for each family.
-    for stripe_start in (0, 4, 8):
-        stripe = names[stripe_start : stripe_start + 4]
-        assert {_family(n) for n in stripe} == {
-            "events",
-            "training",
-            "tpch",
-            "relational",
-        }, stripe
-
-
-def test_head_is_flagship_then_priority_and_fills_budget():
-    names = list(registry())
-    head = tuple(names[:SWEEP_BUDGET])
-    assert head == _FLAGSHIP_INTERLEAVE + _SWEEP_PRIORITY
-    assert len(head) == SWEEP_BUDGET
-
-
-def test_every_never_green_or_edited_query_is_in_the_head():
-    """A query without any driver hash row (or edited after its last
-    one) is unverified by the hard signal — it may not sit outside the
-    sweep window for even one round."""
-    due, latest, _current = _due_queue()
-    edited = _edited_since_green(latest)
-    head = set(list(registry())[:SWEEP_BUDGET])
-    hard = [n for n in due if latest.get(n, 0) == 0 or n in edited]
-    missing = [n for n in hard if n not in head]
-    assert not missing, f"never-green/edited queries outside the sweep window: {missing}"
-
-
-def test_priority_block_spends_no_slot_on_a_fresh_query():
-    """While the due-queue overflows the budget, every priority slot
-    must carry a due entry — a fresh (recently-green, unedited) query in
-    the head would waste a rotation slot the backlog needs.
-
-    One-round grace (round-7 verdict defect): when the driver artifact
-    for the round this head was designed for lands on disk, the head's
-    own entries read as freshly-green (latest == HEAD_DESIGNED_FOR_ROUND)
-    and drop out of the due queue — that is the rotation WORKING, not a
-    wasted slot. Exempt exactly those, mirroring the one-round lag
-    `test_head_design_tracks_the_artifacts` already allows and the
-    promise in `_latest_green`'s docstring."""
-    due, latest, current = _due_queue()
-    if len(due) < PRIORITY_SLOTS:
-        return  # queue underflows: extra slots may hold anything
-    due_set = set(due)
-    not_due = [
-        n for n in _SWEEP_PRIORITY
-        if n not in due_set and latest.get(n, 0) != current
-    ]
-    assert not not_due, f"priority slots wasted on fresh queries: {not_due}"
-
-
-def test_due_queue_overflow_fits_next_round_and_leads_the_tail():
-    """The standing gate from the round-5 verdict: the due-queue may lag
-    the budget by AT MOST one round (`len(overflow) <= PRIORITY_SLOTS`),
-    and the overflow must sit at the front of the tail so next round's
-    reorder is mechanical (and a grown budget picks it up first)."""
-    due, _latest, _current = _due_queue()
-    names = list(registry())
-    head = set(names[:SWEEP_BUDGET])
-    overflow = [n for n in due if n not in head]
-    assert len(overflow) <= PRIORITY_SLOTS, (
-        f"due-queue overflow ({len(overflow)}) exceeds next round's "
-        f"priority capacity ({PRIORITY_SLOTS}); stop adding oracle-backed "
-        f"entries or widen this round's head: {overflow}"
-    )
-    tail_front = names[SWEEP_BUDGET : SWEEP_BUDGET + len(overflow)]
-    assert set(tail_front) == set(overflow), (
-        "due-queue overflow must lead the tail; tail front "
-        f"{sorted(set(tail_front) - set(overflow))} vs overflow "
-        f"{sorted(set(overflow) - set(tail_front))}"
-    )
-
-
-def test_stale_tail_matches_declared_rotation():
-    names = list(registry())
-    assert (
-        tuple(names[SWEEP_BUDGET : SWEEP_BUDGET + len(_STALE_TAIL)]) == _STALE_TAIL
-    )
-
-
 def test_latest_sim_artifact_covers_the_live_population():
-    """SIM_r{N}.json is the judge-verifiable counterpart of the driver
-    artifact — but unlike CORRECTNESS_r*.json it is builder-produced,
-    so nothing used to stop the registry from growing AFTER the round's
-    artifact was recorded (review r9: SIM_r09.json briefly predated the
-    round's own new entry). The newest SIM artifact must therefore name
-    exactly the current sweepable population: every registry entry,
-    plus every unregistered staged bridge entry when the artifact was
-    recorded with SIM_STAGED. Registering or staging a query reddens
-    this until the sim is re-run — the same freshness discipline the
-    ledger applies to oracle texts."""
+    """SIM_r{N}.json is written by tools/driver_sim.py, so nothing else
+    stops the registry from growing after the artifact was recorded.
+    The newest SIM artifact must name exactly the current registry;
+    registering a query reddens this until the sim is re-run."""
     sims = sorted(
         _REPO.glob("SIM_r*.json"),
         key=lambda p: int(re.search(r"_r(\d+)\.json$", p.name).group(1)),
     )
     if not sims:
         return
-    art = json.loads(sims[-1].read_text())
-    recorded = set(art["queries"])
+    recorded = set(json.loads(sims[-1].read_text())["queries"])
     population = set(registry())
-    if art["summary"].get("includes_staged"):
-        from tagmarshal_data_lakehouse_spark.queries import telemetry_bridge as tb
-
-        for a in dir(tb):
-            if a.endswith("_STAGED") and a[0] == "R":
-                population.update(
-                    q.name for q in getattr(tb, a) if q.name not in population
-                )
     assert recorded == population, (
-        f"{sims[-1].name} is stale against the live population: "
+        f"{sims[-1].name} is stale against the live registry: "
         f"missing {sorted(population - recorded)}, "
         f"ghost {sorted(recorded - population)} — re-run "
-        "SIM_STAGED=1 SIM_OUT=... tools/driver_sim.py"
+        "SIM_OUT=... tools/driver_sim.py"
     )
 
 

@@ -175,3 +175,12 @@ def test_encode_gemm_twin_parity(spark, sf_smoke):
     ea = pq.encode(edf, books, use_gemm=False).select("vec_id", "pq_code").collect()
     eb = pq.encode(edf, books, use_gemm=True).select("vec_id", "pq_code").collect()
     assert {r["vec_id"]: r["pq_code"] for r in ea} == {r["vec_id"]: r["pq_code"] for r in eb}
+    # Re-encoding a frame that already carries the output column must
+    # replace it on both paths, not append a duplicate on one of them.
+    coded = pq.encode(embs, books, use_gemm=False)
+    ra = pq.encode(coded, books, use_gemm=False)
+    rb = pq.encode(coded, books, use_gemm=True)
+    assert ra.columns == rb.columns == coded.columns
+    assert sorted(map(tuple, ra.select("vec_id", "pq_code").collect())) == sorted(
+        map(tuple, rb.select("vec_id", "pq_code").collect())
+    )

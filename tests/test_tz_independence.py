@@ -76,37 +76,33 @@ TS_QUERIES = [
     # r09 NTZ-contract fix, so session tz never enters at all.
     "telemetry_round_progression",
     "telemetry_hole_duration",
-    # r9 promotions (R10_STAGED's _TS_STAGED names, registered this
-    # round): overview_stats emits CAST(event_date AS TIMESTAMP) bounds;
+    # overview_stats emits CAST(event_date AS TIMESTAMP) bounds;
     # events_per_course emits the same date-as-timestamp first/last
     # bounds per course.
     "telemetry_overview_stats",
     "telemetry_events_per_course",
-    # r9 second wave (R11/R12 _TS_STAGED names): course_summary and
-    # infrastructure_stats emit date-as-timestamp activity bounds;
-    # expl_dataset_variance emits MIN/MAX fix_timestamp per course.
+    # course_summary and infrastructure_stats emit date-as-timestamp
+    # activity bounds; expl_dataset_variance emits MIN/MAX fix_timestamp
+    # per course.
     "telemetry_course_summary",
     "telemetry_infrastructure_stats",
     "telemetry_expl_dataset_variance",
-    # r10 promotions (R13/R14 _TS_STAGED names): ex_events_by_date and
-    # missing_ts_sample emit CAST(fix_timestamp AS DATE)-as-timestamp
-    # columns; the seasonality/top-3/bottom-3 demos bucket by
-    # DATE_TRUNC('month', round_start_ts) via the month model.
+    # ex_events_by_date and missing_ts_sample emit CAST(fix_timestamp AS
+    # DATE)-as-timestamp columns; the seasonality/top-3/bottom-3 demos
+    # bucket by DATE_TRUNC('month', round_start_ts) via the month model.
     "telemetry_ex_events_by_date",
     "telemetry_missing_ts_sample",
     "telemetry_demo_seasonality_months",
     "telemetry_demo_top3_months",
     "telemetry_demo_bottom3_months",
-    # r10 second wave (R15/R16 _TS_STAGED names): round_sample emits
-    # raw per-event NTZ fix_timestamp rows; course_summary_with_profile
-    # emits date-as-timestamp activity bounds; round_duration_details
-    # emits a date-as-timestamp round_date (CAST(MIN(event_date) AS
-    # TIMESTAMP)).
+    # round_sample emits raw per-event NTZ fix_timestamp rows;
+    # course_summary_with_profile emits date-as-timestamp activity
+    # bounds; round_duration_details emits a date-as-timestamp
+    # round_date (CAST(MIN(event_date) AS TIMESTAMP)).
     "telemetry_round_sample",
     "telemetry_course_summary_with_profile",
     "telemetry_round_duration_details",
-    # r11 promotion (R17's _TS_STAGED name, engine extension): the
-    # hopping window emits NTZ window_start stamps derived by field
+    # The hopping window emits NTZ window_start stamps derived by field
     # arithmetic — the exact surface this gate exists for.
     "events_hopping_window",
 ]

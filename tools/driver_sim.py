@@ -45,31 +45,6 @@ def main() -> int:
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
-    # SIM_STAGED=1 appends every not-yet-registered R{N}_STAGED bridge
-    # block (telemetry_bridge.py) so a promotion round can hold staged
-    # entries to the exact driver harness before touching the registry.
-    # Names already in the registry are SKIPPED, never overwritten
-    # (mirroring test_telemetry_bridge_staged's `not in _REGISTERED`
-    # filter): if a promoted entry were ever edited independently of its
-    # staged block, an overwrite would silently sweep the staged variant
-    # instead of what is actually registered, masking regressions.
-    staged = bool(os.environ.get("SIM_STAGED"))
-    if staged:
-        from tagmarshal_data_lakehouse_spark.queries import telemetry_bridge
-
-        blocks = [
-            getattr(telemetry_bridge, a)
-            for a in sorted(dir(telemetry_bridge))
-            if a.endswith("_STAGED") and a[0] == "R"
-        ]
-        for block in blocks:
-            for q in block:
-                if q.name in queries:
-                    continue
-                queries[q.name] = q.build
-                if q.oracle is not None:
-                    oracles[q.name] = q.oracle
-
     from tests.oracle_harness import compare, duckdb_connection
 
     results: dict[str, str] = {}
@@ -105,10 +80,6 @@ def main() -> int:
         "bad": n_bad,
         "elapsed_sec": round(time.time() - t_start, 1),
     }
-    if staged:
-        # A SIM_STAGED run attests to registry + R8_STAGED, not the
-        # registry alone — the artifact must say which population.
-        summary["includes_staged"] = True
     print(json.dumps(summary))
     out_path = os.environ.get("SIM_OUT")
     if out_path:

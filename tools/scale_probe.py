@@ -255,7 +255,7 @@ def main() -> int:
             docs, max_doc_freq=50, max_doc_frac=0.08, prefix_filter=True
         ),
         "token_quality": lambda docs, ev: text.quality_features(docs),
-        # per-source concentration profile (R17-staged): the token-grain
+        # per-source concentration profile: the token-grain
         # (source, token) count is the cost; output stays one row per
         # source at any corpus size
         "source_diversity": lambda docs, ev: text.source_token_diversity(docs),

@@ -1,41 +1,22 @@
-"""Maintain QUERY_TEXT_HASHES.json — the mechanical edited-since-green
-ledger behind tests/test_registry_order.py.
+"""Maintain QUERY_TEXT_HASHES.json — the oracle-text ledger behind
+tests/test_registry_order.py.
 
-The rotation gate must know when a driver-green query's TEXT changed
-after its green row (the round-6 failure mode: widening the shared
-events->telemetry bridge silently changed the SQL under 8 green
-telemetry entries, and the hand-maintained ``_EDITED_SINCE_GREEN``
-stayed empty). This ledger makes that detection mechanical for the
-class that actually bit: every oracle-backed query's ORACLE text —
-which f-string-inlines all shared SQL (bridge, fact_rounds CTEs,
-topology), so a shared-text edit changes every dependent oracle — is
-hashed into a checked-in file together with the round the current text
-was recorded for. The gate then derives "edited since green" as
-
-    sha(current oracle) != recorded sha    (un-recorded edit: also a
-                                            hard test failure, fix by
-                                            re-running this tool)
-    OR recorded round > last driver-green  (recorded edit not yet
-                                            re-verified by the driver)
-
-Builder-side-only edits (Spark code paths whose oracle text is
-unchanged) remain hand-listed in ``_EDITED_SINCE_GREEN`` — but a
-builder edit that changes RESULTS is caught red by the driver hash
-itself, so the mechanical oracle-text ledger covers the silent class.
+Every oracle-backed query's ORACLE text, which f-string-inlines all the
+shared SQL it reads (bridge, fact_rounds CTEs, topology), is hashed
+into a checked-in ``{name: sha}`` file. A shared-text edit therefore
+changes the recorded sha of every dependent oracle, and
+``test_ledger_is_current`` goes red until the edit is re-recorded
+deliberately (the failure mode this closes: widening the shared
+events->telemetry bridge once silently changed the SQL under 8
+telemetry entries).
 
 Usage, whenever any oracle text changes (including via shared SQL):
 
-    python tools/update_query_text_hashes.py --round <current round>
-
-Changed/new entries are re-recorded at ``--round``; unchanged entries
-keep their prior record. The ledger was seeded once at round 7 with
-each entry's last driver-green round (from CORRECTNESS_r*.json), the
-8 round-6 bridge-edited telemetry entries pinned to round 6.
+    python tools/update_query_text_hashes.py
 """
 
 from __future__ import annotations
 
-import argparse
 import hashlib
 import json
 import sys
@@ -52,55 +33,19 @@ def oracle_sha(text: str) -> str:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument(
-        "--round",
-        type=int,
-        required=True,
-        dest="round_",
-        help="rotation round the re-recorded texts must re-verify under",
-    )
-    args = ap.parse_args()
-
     from tagmarshal_data_lakehouse_spark.queries import registry
 
-    # An edit made AFTER round N's CORRECTNESS artifact landed cannot be
-    # recorded at round N — its green row predates the edit, so
-    # `recorded round > latest green` would read as already-verified and
-    # the edit would silently skip driver re-verification (the exact
-    # failure mode this ledger exists to close). Clamp to one past the
-    # newest artifact.
-    import re
-
-    newest = 0
-    for p in _REPO.glob("CORRECTNESS_r*.json"):
-        m = re.search(r"_r(\d+)\.json$", p.name)
-        if m:
-            newest = max(newest, int(m.group(1)))
-    round_ = max(args.round_, newest + 1)
-    if round_ != args.round_:
-        print(
-            f"note: CORRECTNESS_r{newest:02d}.json already exists — "
-            f"recording at round {round_} so the edit re-verifies under the driver"
-        )
-
     old = json.loads(LEDGER.read_text()) if LEDGER.exists() else {}
-    out: dict[str, dict] = {}
-    changed: list[str] = []
-    for name, q in registry().items():
-        if q.oracle is None:
-            continue
-        sha = oracle_sha(q.oracle)
-        prev = old.get(name)
-        if prev and prev["sha"] == sha:
-            out[name] = prev
-        else:
-            out[name] = {"sha": sha, "round": round_}
-            changed.append(name)
+    out = {
+        name: oracle_sha(q.oracle)
+        for name, q in registry().items()
+        if q.oracle is not None
+    }
+    changed = sorted(n for n, sha in out.items() if old.get(n) != sha)
     dropped = sorted(set(old) - set(out))
     LEDGER.write_text(json.dumps(out, indent=0, sort_keys=True) + "\n")
     print(f"{len(out)} oracle-backed entries in the ledger")
-    print(f"{len(changed)} recorded at round {round_}: {changed}")
+    print(f"{len(changed)} re-recorded: {changed}")
     if dropped:
         print(f"dropped (no longer in the registry): {dropped}")
 
