@@ -222,8 +222,8 @@ def cmd_curate(args) -> int:
     """
     from pyspark.sql import functions as F
 
+    from .routing import restore_session_width
     from .training.curation import curate_corpus
-    from .training.dedup import restore_session_width
 
     spark, _ = _spark_and_lake(args)
     docs = spark.read.parquet(f"{args.sf_dir}/documents.parquet")

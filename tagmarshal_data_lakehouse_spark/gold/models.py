@@ -916,7 +916,6 @@ class GoldBuilder:
         self,
         fact_telemetry_event: DataFrame,
         dim_facility_topology: DataFrame | None = None,
-        only: list[str] | None = None,
     ) -> dict[str, DataFrame]:
         fact_telemetry_event.createOrReplaceTempView("fact_telemetry_event")
         if dim_facility_topology is None:
@@ -926,21 +925,7 @@ class GoldBuilder:
             dim_facility_topology = self.spark.createDataFrame([], DIM_FACILITY_TOPOLOGY)
         dim_facility_topology.createOrReplaceTempView("dim_facility_topology")
 
-        wanted = set(only or [m.name for m in MODELS])
-        # expand transitive deps
-        by_name = {m.name: m for m in MODELS}
-        frontier = list(wanted)
-        while frontier:
-            n = frontier.pop()
-            if n in by_name:
-                for d in by_name[n].deps:
-                    if d in by_name and d not in wanted:
-                        wanted.add(d)
-                        frontier.append(d)
-
         for model in MODELS:  # MODELS is already topologically ordered
-            if model.name not in wanted:
-                continue
             df = self.spark.sql(model.sql)
             if model.name == "fact_rounds" and self.cache_fact_rounds:
                 df = df.cache()
@@ -982,8 +967,8 @@ def incremental_update(
       rollups (gold/rollups.py) that this refresh maintains from the
       same pruned slice — no fact rescan; the first call seeds the
       rollups with one full scan, every later refresh is O(new data).
-      A global model without a registered combiner would fall back to a
-      column-pruned full-fact rebuild (none exists today).
+      Every global model has a combiner (`rollups.COMBINERS`, pinned
+      in tests/test_gold_incremental.py).
 
     Returns {model_name: rows_written}.  Result state matches a full
     `build_all` + overwrite with two documented exceptions (both
@@ -1061,15 +1046,8 @@ def incremental_update(
             timings["rollup_refresh"] = round(time.perf_counter() - t0, 3)
 
         t0 = time.perf_counter()
-        uncombinable = [n for n in global_models if n not in _rollups.COMBINERS]
-        rebuilt = (
-            GoldBuilder(spark).build(fact_full, dim_facility_topology, only=uncombinable)
-            if uncombinable
-            else {}
-        )
         for name in global_models:
-            combine = _rollups.COMBINERS.get(name)
-            df = combine(spark, lake) if combine else rebuilt[name]
+            df = _rollups.COMBINERS[name](spark, lake)
             written[name] = _write_observed(
                 df, lambda d, n=name: lake.overwrite(f"gold.{n}", d)
             )

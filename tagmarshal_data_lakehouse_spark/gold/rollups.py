@@ -73,9 +73,6 @@ ROLLUP_TABLES = (
     "gold._rollup_device",
 )
 
-#: global models this module can derive without a fact scan
-COMBINABLE = ("global_overview", "dim_device")
-
 
 def rollup_partials(fact: DataFrame) -> dict[str, DataFrame]:
     """Per-course partial aggregates from a fact slice.

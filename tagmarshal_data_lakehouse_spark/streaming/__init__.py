@@ -8,11 +8,6 @@ event-time analytics over the events stream.
 """
 
 from .ingest import stream_silver  # noqa: F401
-from .sizing import (  # noqa: F401
-    restore_stream_session_width,
-    size_session_for_stream,
-    suggest_stream_shuffle_partitions,
-)
 from .events import (  # noqa: F401
     stream_curate,
     stream_dedup_against_corpus,

@@ -24,25 +24,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import routing
+
 
 def _maybe_size_session(
     df: DataFrame, state_rows_estimate: int | None, operator: str
 ) -> None:
     """Apply the measured per-store state sizing before the plan is
-    built (sizing.size_session_for_stream) — the width must be in force
-    when the query STARTS, because it fixes the state store count and
-    is pinned into the checkpoint.  Every stateful builder here takes a
+    built (routing.size_session) — the width must be in force when the
+    query STARTS, because it fixes the state store count and is pinned
+    into the checkpoint.  Every stateful builder here takes a
     ``state_rows_estimate=`` parameter routing through this, so the
     measured remedy is reachable from the operators it sizes (VERDICT
-    r12) instead of only from the helper module.  The builder passes
-    its own operator kind: sizing widens ONLY kinds with a measured
-    per-store bind (the stream-stream join); for the rest the call is
-    a documented no-op — the r13 sessions rerun measured widening 1.6x
-    harmful where no bind exists (sizing.py module docstring)."""
+    r12).  The builder passes its own operator kind: sizing widens ONLY
+    kinds with a measured per-store bind (the stream-stream join); for
+    the rest the call is a documented no-op — the r13 sessions rerun
+    measured widening 1.6x harmful where no bind exists."""
     if state_rows_estimate is not None:
-        from .sizing import size_session_for_stream
-
-        size_session_for_stream(df.sparkSession, state_rows_estimate, operator)
+        routing.size_session(df.sparkSession, operator, state_rows_estimate)
 
 
 def stream_tumbling_counts(
@@ -57,7 +56,7 @@ def stream_tumbling_counts(
     stream time is exact per window here since the key is grouped).
 
     `state_rows_estimate` (open windows — scale-invariant for tumbling,
-    so usually tiny) routes through sizing.size_session_for_stream —
+    so usually tiny) routes through routing.size_session —
     a no-op for windowed aggs, whose state is scale-invariant."""
     _maybe_size_session(events, state_rows_estimate, "windowed_agg")
     return (
@@ -93,7 +92,7 @@ def stream_hopping_counts(
     against the DuckDB oracle with an explicit 2-row in-plan expansion.
     State per key grows with size/hop concurrently-open windows — keep
     the ratio small on a 100 TB/day feed.  `state_rows_estimate` (open
-    windows x size/hop) routes through sizing.size_session_for_stream —
+    windows x size/hop) routes through routing.size_session —
     a no-op for windowed aggs, whose state is scale-invariant."""
     _maybe_size_session(events, state_rows_estimate, "windowed_agg")
     return (
@@ -139,7 +138,7 @@ def stream_funnel_progress(
     (bounded, self-cleaning via completion/timeout); processing is
     Arrow-batched pandas per key group; one shuffle on user_id — the same
     key the built-in stateful operators would use.  `state_rows_estimate`
-    (in-flight users) routes through sizing.size_session_for_stream —
+    (in-flight users) routes through routing.size_session —
     a no-op today: bounded per-key state has no measured bind.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -251,7 +250,7 @@ def stream_session_windows(
     """Gap-based sessions per key via the native session_window operator.
 
     `state_rows_estimate` (concurrently-open sessions, ~users x open
-    sessions each) routes through sizing.size_session_for_stream — a
+    sessions each) routes through routing.size_session — a
     documented NO-OP: sessions are linear (not bound) at the measured
     3.05M rows/store, and the r13 one-knob rerun at the join's
     suggested width was 1.6x SLOWER (SCALE.md), so no width change is
@@ -294,7 +293,7 @@ def stream_interval_join(
     `state_rows_estimate` (both sides' rows within the watermark
     horizon — THE operator the r12 4096x probe measured the per-store
     bind on) applies the measured sizing via
-    sizing.size_session_for_stream before the plan builds; at the
+    routing.size_session before the plan builds; at the
     probe's 163.6M-row point the suggested width ran 1.9x faster than
     the 32-store default.
     """
@@ -356,7 +355,7 @@ def stream_dedup_within_watermark(
     overlapping file drops) feed an exactly-once table.
 
     `state_rows_estimate` (distinct keys within the watermark horizon)
-    routes through sizing.size_session_for_stream — a documented
+    routes through routing.size_session — a documented
     NO-OP on the RocksDB session default: dedup ran SUB-linear at
     12.8M rows/store (r12 4096x), so there is no bind to widen for.
     The knob that matters at depth is the store PROVIDER: the heap

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import routing
+
 
 def _sq_dist_sql_expr(vec_expr: str, centroid: list[float]) -> str:
     """`_sq_dist_sql` over an arbitrary array-typed SQL expression
@@ -55,42 +57,6 @@ def _sq_dist_sql(vec_col: str, centroid: list[float]) -> str:
 def _sq_dist(vec_col: str, centroid: list[float]) -> F.Column:
     """Column twin of `_sq_dist_sql` (kept for expression composition)."""
     return F.expr(_sq_dist_sql(vec_col, centroid))
-
-
-# Measured crossover for routing assignment through the Arrow/numpy GEMM
-# kernel instead of the interpreted HOF folds (r14 optimization pass,
-# guide §4.2).  Two conditions, both required:
-#
-# - work per row (k*dim interpreted lambda steps) must be worth a numpy
-#   matmul element — below _GEMM_ASSIGN_MIN_FOLD the expression wins at
-#   any corpus size;
-# - the TOTAL interpreted work (estimated rows x steps/row) must beat
-#   the Arrow boundary's fixed cost (worker roundtrip, batch
-#   transpose) — routed from Catalyst plan statistics at ZERO Spark
-#   jobs, the same `_estimated_rows` mechanism behind the LSH
-#   `_corpus_is_small` routing.  Measured points (k=10, dim=64, this
-#   sandbox): the fit at 2k rows (1.3M steps/iteration) reads expr
-#   3.1 s vs GEMM 3.3 s — below crossover; pq encode at 2k rows (2.0M
-#   steps) reads expr 0.96 s vs GEMM 0.79 s — above; the fit at 32k
-#   rows (20M steps) 8.1 vs 3.3 (GEMM 2.5x) and at 128k rows 22.7 vs
-#   4.3 (GEMM 5.3x).  2M total steps splits the measured points, and
-#   unknown statistics default to the zero-fixed-cost expression
-#   branch (a 10-row createDataFrame corpus must never pay the
-#   boundary).
-#
-# Either branch is bit-identical by construction (one-sided confident
-# routing inside the GEMM), so this is a pure plan choice.
-_GEMM_ASSIGN_MIN_FOLD = 256
-_GEMM_ASSIGN_MIN_TOTAL_STEPS = 2_000_000
-
-
-def _route_gemm(df: DataFrame, work_per_row: int) -> bool:
-    from .similarity import _estimated_rows
-
-    if work_per_row < _GEMM_ASSIGN_MIN_FOLD:
-        return False
-    est = _estimated_rows(df)
-    return est is not None and est * work_per_row >= _GEMM_ASSIGN_MIN_TOTAL_STEPS
 
 
 def _centroids_2d_sql(centroids: list[list[float]]) -> str:
@@ -251,7 +217,7 @@ def assign_clusters(
 
     - **expression** (small k*dim): k codegen'd distance folds + argmin
       via array_position — identical to the historical form.
-    - **GEMM** (default above `_GEMM_ASSIGN_MIN_FOLD` fold steps/row):
+    - **GEMM** (where `routing.gemm_for_assignment` says it pays):
       an Arrow-batched pandas UDF computes the CONFIDENT argmin via one
       numpy matmul (`_gemm_argmin_udf` — only the vector column crosses
       the boundary, one int comes back); rows the gap test cannot prove
@@ -269,7 +235,7 @@ def assign_clusters(
     k = len(centroids)
     dim = len(centroids[0]) if centroids else 0
     if use_gemm is None:
-        use_gemm = _route_gemm(df, k * dim)
+        use_gemm = routing.gemm_for_assignment(df, k * dim)
     if not use_gemm:
         return (
             df.selectExpr("*", f"{dists} AS _dists")
@@ -339,7 +305,7 @@ def assign_clusters_multiprobe(
             ), 1, {n_probes})"""
     )
     if use_gemm is None:
-        use_gemm = _route_gemm(df, k * dim)
+        use_gemm = routing.gemm_for_assignment(df, k * dim)
     if use_gemm:
         # GEMM twin (r14 — see assign_clusters): the pandas UDF returns
         # the n_probes probe ids when the consecutive GEMM gaps prove
@@ -485,7 +451,7 @@ def kmeans(
         # one routing decision for the whole fit (r14): the loop's
         # frames are the same corpus, and per-iteration stat reads buy
         # nothing; the final assignment below reuses the same branch.
-        use_gemm = _route_gemm(df, k * dim)
+        use_gemm = routing.gemm_for_assignment(df, k * dim)
         centroids = init_centroids(fit_frame, k, id_col, vec_col)
 
         sizes: dict[int, int] = {}

@@ -287,8 +287,8 @@ def curate_corpus(
     `auto_size_session` / `n_docs_estimate` pass through to the
     verdict stage (only meaningful with `near_dup_threshold`): the
     measured heap-bind shuffle sizing is applied from the pipeline
-    itself (`dedup.size_session_for_dedup`), and the caller restores
-    the width with `dedup.restore_session_width` AFTER the returned
+    itself (`routing.size_session`), and the caller restores the
+    width with `routing.restore_session_width` AFTER the returned
     lazy frame has executed — the packaged CLI `curate` command does
     exactly this.
     """

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .. import routing
 from .text import normalize_text
 
 
@@ -63,165 +64,6 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     if n_splits < max(2, target // 2):
         return df.repartition(target, *[F.col(c) for c in df.columns])
     return df
-
-# Measured constants behind suggest_dedup_shuffle_partitions (SCALE.md,
-# r10 sixth octave + r11 seventh octave + r12 64g crossover sweep,
-# eight attributed points):
-# - Bind onset: clean sessions through ~64k docs/heap-GiB (2.048M @
-#   48g and 4.096M @ 100g at ~41-43k, exponent ~1.07; 4.096M @ 64g at
-#   64k, exponent 1.04 — the r12 sweep); GC-bound sessions at ~82-85k/
-#   GiB (4.096M @ 48g exponent 2.54, 8.192M @ 100g exponent 1.54).
-#   The onset therefore sits in (64k, 82k]/GiB; 72k splits the bracket
-#   with margin on both measured sides. (The r11 value of 48k was
-#   conservative-early — and the r12 sweep showed early is NOT safe:
-#   widening at the clean 64k-ratio point cost 2.3x, see below.)
-# - The width remedy is BIND-POINT-LOCAL (r11's key negative result,
-#   sharpened by r12): it helps ONLY at an actual GC bind. At the 48g
-#   bind, widening fixed it: 32 parts 259.8s, 128 parts 146.0s, 256
-#   parts 200.2s (optimum ~32k docs/task). At the 100g cache-overflow
-#   bind the SAME sweep is monotonically worse: 386.5/468.0/567.4 s at
-#   32/128/256 — the ~60 GiB gram cache outgrows the storage-safe
-#   fraction and width only adds churn. And at a CLEAN point (4.096M @
-#   64g, r12) widening is pure cost: 93.6 s at 32 parts vs 213.1 s at
-#   128. Widening is therefore applied only past the measured onset on
-#   executor-class heaps (<= 64 GiB, cap 128); past the cache cliff
-#   the honest remedy is more executors, not width.
-_DEDUP_HEAP_DOCS_PER_GIB = 72_000
-_DEDUP_DOCS_PER_TASK = 32_000
-_DEDUP_WIDEN_MAX_HEAP_GIB = 64  # widening validated at 48g; harmful at 100g
-_DEDUP_MAX_WIDTH = 128  # widest reading that ever beat the default
-
-
-def suggest_dedup_shuffle_partitions(
-    n_docs: int,
-    heap_gib: float,
-    default_partitions: int,
-) -> int:
-    """Shuffle-partition width for the minhash verdict path, derived
-    from the r10/r11 heap-bind measurements (constants above).
-
-    Returns ``default_partitions`` while the per-JVM document count
-    sits below the measured GC-bind ratio (72k docs/heap-GiB). Past it,
-    on executor-class heaps (<= 64 GiB) it widens to the next power of
-    two landing ~32k docs per task, capped at 128 — the 146.0s winner
-    of the 8192x/48g one-knob sweep. On larger single-JVM heaps past
-    the ratio it deliberately returns the default: the r11 seventh
-    octave measured every wider setting as strictly worse there
-    (386.5 / 468.0 / 567.4 s at 32/128/256), because the bind is the
-    cache outgrowing the heap, which width cannot fix — the remedy is
-    more executors. On a real cluster ``heap_gib`` is the per-EXECUTOR
-    heap and ``n_docs`` the per-executor document share — executors
-    scale with data, so the suggestion stays bounded; the power-of-two
-    snap keeps AQE coalescing friendly and the choice stable under
-    small estimate drift.
-    """
-    if n_docs <= 0 or heap_gib <= 0 or default_partitions <= 0:
-        raise ValueError("n_docs, heap_gib and default_partitions must be positive")
-    if n_docs <= _DEDUP_HEAP_DOCS_PER_GIB * heap_gib:
-        return default_partitions
-    if heap_gib > _DEDUP_WIDEN_MAX_HEAP_GIB:
-        return default_partitions  # measured: width only hurts here
-    want = -(-n_docs // _DEDUP_DOCS_PER_TASK)
-    width = 1 << (want - 1).bit_length()
-    return max(default_partitions, min(width, _DEDUP_MAX_WIDTH))
-
-
-def jvm_heap_gib(spark) -> float:
-    """Best-effort JVM heap for the sizing helper: the driver memory in
-    local mode (one JVM holds everything there), else executor memory.
-    Defaults to Spark's own 1g when neither conf is set.
-
-    Parses the full Spark byte-string grammar (JavaUtils.byteStringAs):
-    optional one-letter prefix with optional trailing 'b' ('48g' ==
-    '48gb'), bare 'b' for bytes, and a BARE NUMBER meaning MiB — the
-    default unit Spark itself applies to memory confs."""
-    import re
-
-    master = spark.conf.get("spark.master", "")
-    key = "spark.driver.memory" if master.startswith("local") else "spark.executor.memory"
-    raw = spark.conf.get(key, "1g").strip().lower()
-    m = re.fullmatch(r"(\d+)\s*([kmgt]?b?)", raw)
-    if not m:
-        raise ValueError(f"unparseable Spark memory string {raw!r} for {key}")
-    num, suffix = int(m.group(1)), m.group(2)
-    gib_per_unit = {
-        "": 1 / 1024,  # bare number: MiB (Spark's memory-conf default unit)
-        "b": 1 / (1024**3),
-        "k": 1 / (1024**2),
-        "kb": 1 / (1024**2),
-        "m": 1 / 1024,
-        "mb": 1 / 1024,
-        "g": 1.0,
-        "gb": 1.0,
-        "t": 1024.0,
-        "tb": 1024.0,
-    }
-    return num * gib_per_unit[suffix]
-
-
-# Remembers the session's shuffle width from BEFORE the first sizing
-# call.  Without it repeated calls ratchet: once a large-corpus run
-# widens to 128, a later small-corpus call would read 128 back as the
-# "default" and never narrow again (the SCALE_PROBE_AUTO_PARTS loop in
-# tools/scale_probe.py hits exactly that across reps).  _LAST_SET
-# records what the sizing itself last wrote: when the live conf
-# differs, the USER changed the width since — their value becomes the
-# new baseline instead of being silently clobbered by a stale one.
-_DEDUP_BASELINE_KEY = "spark.tagmarshal.dedup.baselineShufflePartitions"
-_DEDUP_LAST_SET_KEY = "spark.tagmarshal.dedup.lastSetShufflePartitions"
-
-
-def size_session_for_dedup(spark, n_docs: int) -> int:
-    """Apply the measured remedy: set ``spark.sql.shuffle.partitions``
-    for a verdict-dedup run from the estimated per-JVM document count.
-
-    Session-level by design — the same knob the round-10 probe turned
-    (`SCALE_PROBE_SHUFFLE_PARTS`), and shuffle width is a session conf
-    in Spark, not a per-plan hint.  The pre-sizing width is captured
-    under ``spark.tagmarshal.dedup.baseline...`` and later calls size
-    from THAT baseline, so a small-corpus call after a widened run
-    narrows back instead of ratcheting — and a width the USER sets
-    between sizing calls is adopted as the new baseline (the recorded
-    last-set value distinguishes our own write from theirs), never
-    silently reverted.  One detection blind spot, by construction: a
-    user width that happens to EQUAL the last value sizing wrote (e.g.
-    deliberately setting 128 right after sizing chose 128) is
-    indistinguishable from our own write — Spark conf records values,
-    not who set them — so the stale baseline survives and a later
-    small-corpus call would narrow past the user's intent.  To set an
-    intentional width equal to the last auto-set value, call
-    :func:`restore_session_width` FIRST (it clears the recorded
-    baseline, so the next sizing call re-captures yours; pinned in
-    tests/test_training_dedup.py).  Callers interleaving other work
-    can restore with :func:`restore_session_width`.  Returns the width
-    it set (the baseline when the heap is comfortable, so calling it
-    is always safe)."""
-    current = spark.conf.get("spark.sql.shuffle.partitions")
-    baseline = spark.conf.get(_DEDUP_BASELINE_KEY, None)
-    if baseline is None or current != spark.conf.get(_DEDUP_LAST_SET_KEY, None):
-        baseline = current  # first call, or user-changed width: re-capture
-        spark.conf.set(_DEDUP_BASELINE_KEY, baseline)
-    width = suggest_dedup_shuffle_partitions(n_docs, jvm_heap_gib(spark), int(baseline))
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
-    spark.conf.set(_DEDUP_LAST_SET_KEY, str(width))
-    return width
-
-
-def restore_session_width(spark) -> int | None:
-    """Put ``spark.sql.shuffle.partitions`` back to its pre-sizing
-    baseline (no-op if sizing never ran).  Only call this AFTER the
-    dedup plan has actually executed — the returned frames are lazy,
-    and the width in force at action time is what the measurements
-    validated.  Clears the recorded baseline, so the next sizing call
-    captures the then-current width afresh.  Returns the restored
-    width, or None if untouched."""
-    baseline = spark.conf.get(_DEDUP_BASELINE_KEY, None)
-    if baseline is None:
-        return None
-    spark.conf.set("spark.sql.shuffle.partitions", baseline)
-    spark.conf.unset(_DEDUP_BASELINE_KEY)
-    spark.conf.unset(_DEDUP_LAST_SET_KEY)
-    return int(baseline)
 
 
 # Deterministic salts for minhash permutations, derived from a fixed seed
@@ -496,9 +338,7 @@ def minhash_signatures(
     hashed = shingled.selectExpr(
         "*", "transform(shingles, s -> xxhash64(s)) AS gram_hashes"
     )
-    from .clustering import _route_gemm
-
-    if _route_gemm(hashed, num_perm * 64):
+    if routing.gemm_for_assignment(hashed, num_perm * 64):
         # Arrow/numpy signature twin (r14, guide §4.2 — the same
         # interpreted-HOF-to-vectorized move as the k-means GEMM
         # assignment): the num_perm x G rehash+min is the dedup
@@ -710,14 +550,14 @@ def minhash_dedup_verdicts(
     never a pair-grain frame.
 
     ``auto_size_session=True`` applies the measured heap-bind remedy
-    (:func:`size_session_for_dedup` — 72k docs/heap-GiB onset, widen
+    (`routing.size_session` — 72k docs/heap-GiB onset, widen
     cap 128 on <= 64 GiB heaps, SCALE.md r10-r12 octaves) before
     building the plan, sized from ``n_docs_estimate`` (or one
     ``df.count()`` when not given — a single columnar scan, cheap next
     to the dedup itself).  The width is a SESSION conf and must stay in
     force until the returned lazy frame executes; the pre-sizing value
     is recorded so callers can put it back afterwards with
-    :func:`restore_session_width`.
+    `routing.restore_session_width`.
 
     The 64x scale probe (SCALE.md) proved the honest 100 TB limit of
     `minhash_near_duplicates` is not the LSH join — it is the pair
@@ -778,7 +618,7 @@ def minhash_dedup_verdicts(
         raise ValueError(f"num_perm ({num_perm}) must be a positive multiple of bands ({bands})")
     if auto_size_session:
         n = n_docs_estimate if n_docs_estimate is not None else df.count()
-        size_session_for_dedup(df.sparkSession, n)
+        routing.size_session(df.sparkSession, routing.MINHASH_DEDUP, n)
     rows_per_band = num_perm // bands
     # persist_shingles caches the gram frame — and the cache is
     # LOAD-BEARING beyond avoiding recompute (r10 finding, measured in

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .. import routing
 from .clustering import _sq_dist
 
 
@@ -189,12 +190,12 @@ def encode(
     evaluate the exact fold expressions through a lazily-evaluated CASE
     per subspace.  Codes are bit-identical either way.
     """
-    from .clustering import _dists_sql, _route_gemm
+    from .clustering import _dists_sql
 
     m = len(codebooks)
     sub = len(codebooks[0][0])
     if use_gemm is None:
-        use_gemm = _route_gemm(df, sum(len(b) * sub for b in codebooks))
+        use_gemm = routing.gemm_for_assignment(df, sum(len(b) * sub for b in codebooks))
     if not use_gemm:
         staged = df
         for j in range(m):
@@ -352,9 +353,12 @@ def ivfpq_topk(
     broadcast rows the raw path already uses, just with cell-dependent
     tables.
     """
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    from .similarity import MAX_BROADCAST_QUERIES, _guard_query_bound, fit_coarse_centers
+    from .similarity import (
+        MAX_BROADCAST_QUERIES,
+        _cell_probe_udf,
+        _guard_query_bound,
+        fit_coarse_centers,
+    )
 
     _guard_query_bound(n_queries, MAX_BROADCAST_QUERIES, "ivfpq_topk")
 
@@ -365,18 +369,7 @@ def ivfpq_topk(
         centers = fit_coarse_centers(embeddings, n_cells, seed, vec_col)
     centers_n = centers / np.maximum(np.linalg.norm(centers, axis=1, keepdims=True), 1e-12)
 
-    def _probe_udf(n: int):
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def probe(vec_series: pd.Series) -> pd.Series:
-            mat = np.stack(vec_series.to_numpy()).astype(np.float64)
-            mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            sims = mat @ centers_n.T
-            top = np.argsort(-sims, axis=1)[:, :n]
-            return pd.Series(list(top.astype(np.int32)))
-
-        return probe
-
-    with_cell = vecs.withColumn("cell", _probe_udf(1)(F.col(vec_col)).getItem(0))
+    with_cell = vecs.withColumn("cell", _cell_probe_udf(centers_n, 1)(F.col(vec_col)).getItem(0))
     if residual:
         # residual = vec - centers[cell], row-local against the centroid
         # table embedded in the plan (n_cells x d doubles — tiny).

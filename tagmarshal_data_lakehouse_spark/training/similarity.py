@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .. import routing
+
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
     "cast(0.0 as double), (acc, v) -> acc + v)"
@@ -488,59 +490,6 @@ def _probe_max_dim(embeddings: DataFrame, vec_col: str) -> int:
     return int(d) if d is not None and d > 0 else 0
 
 
-# On-disk bytes per embedding row, calibrated on the 64-dim float test
-# corpus (sf0.1: 798 KB / 2000 rows ≈ 400 B).  Routing only needs the
-# right order of magnitude: both branches produce identical buckets, so
-# an estimate near the crossover can only shift the plan, never the
-# result (and at the crossover the two plans cost the same by
-# definition).
-_EST_BYTES_PER_ROW = 400
-
-
-# Catalyst's "statistics unavailable" sentinel: non-file-backed plans
-# (LogicalRDD / createDataFrame / mapInPandas output) report
-# sizeInBytes = Long.MaxValue, which is "unknown", not "huge".
-_STATS_UNKNOWN_SIZE = (1 << 63) - 1
-
-
-def _estimated_rows(embeddings: DataFrame) -> "int | None":
-    """Catalyst's row estimate for the frame — ZERO Spark jobs.  The
-    optimized plan's rowCount when the optimizer derived one, else
-    sizeInBytes / _EST_BYTES_PER_ROW, else None for unknown statistics
-    (the Long.MaxValue no-estimate sentinel on non-file-backed plans,
-    or no `_jdf` under Spark Connect)."""
-    try:
-        stats = embeddings._jdf.queryExecution().optimizedPlan().stats()
-        row_count = stats.rowCount()
-        if row_count.isDefined():
-            # py4j renders scala.math.BigInt as a Python int when it fits;
-            # str() round-trip covers both that and the raw JavaObject.
-            return int(str(row_count.get()))
-        size = int(str(stats.sizeInBytes()))
-    except Exception:  # no _jdf (Spark Connect) or plan-stats API drift
-        return None
-    if size >= _STATS_UNKNOWN_SIZE:
-        return None
-    return max(size // _EST_BYTES_PER_ROW, 1)
-
-
-def _corpus_is_small(embeddings: DataFrame, threshold_rows: int) -> bool:
-    """True iff Catalyst estimates the frame at fewer than
-    `threshold_rows` rows — ZERO Spark jobs.  Uses the optimizer's own
-    plan statistics (file sizes for scans, propagated estimates
-    downstream), i.e. the exact mechanism behind the broadcast-join
-    threshold: a cost-based plan choice should come from plan costs,
-    not from running a counting job whose price at 100 TB would dwarf
-    the savings it arbitrates.
-
-    Unknown statistics default to SMALL (the expression branch): a
-    10-row createDataFrame corpus must not pay the mapInPandas fixed
-    costs — the route falls back to the branch whose fixed costs are
-    lowest, and buckets are identical either way (round-7 ADVICE)."""
-    est = _estimated_rows(embeddings)
-    return est is None or est < threshold_rows
-
-
 def resolve_planes_per_band(
     embeddings: DataFrame,
     planes_per_band: "int | str",
@@ -575,7 +524,7 @@ def resolve_planes_per_band(
         return int(planes_per_band)
     if planes_per_band != "auto":
         raise ValueError(f"planes_per_band must be an int or 'auto', got {planes_per_band!r}")
-    est = _estimated_rows(embeddings)
+    est = routing.estimated_rows(embeddings)
     if est is None:
         if not warn_on_unknown:
             # the _auto selector suppresses this: its density pass
@@ -993,7 +942,6 @@ def cosine_near_duplicates_lsh_auto(
     max_bucket: int = 200,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    gemm_density_cutover: float = 50.0,
 ) -> DataFrame:
     """Density-adaptive near-dup scorer: measure the candidate-pair mass
     the banding will produce, then pick the scorer the round-6 probe
@@ -1006,10 +954,9 @@ def cosine_near_duplicates_lsh_auto(
     - DENSE (duplication-heavy): the within-bucket GEMM path — the
       expression path's candidate stream dominates wall-clock
       (measured 19.7 vs 6.3 s at 16x; the timing crossover sits at ~4x
-      amplification). Measured densities at the probe's banding shape
-      (8 bands x 10 planes, max_bucket 500): 10.2 at 1x, 52.9 at 4x,
-      223.7 at 16x — hence the default cutover of 50 candidate pairs
-      per vector.
+      amplification). `routing.gemm_for_pair_scoring` holds the
+      cutover in candidate pairs per vector, with the densities the
+      probe measured.
 
     The decision statistic is computed from an ids-only aggregate over
     the SAME banding the chosen scorer then applies (deterministic
@@ -1062,10 +1009,9 @@ def cosine_near_duplicates_lsh_auto(
             UserWarning,
             stacklevel=2,
         )
-    density = diag["density"]
     scorer = (
         cosine_near_duplicates_lsh_gemm
-        if density >= gemm_density_cutover
+        if routing.gemm_for_pair_scoring(diag["density"])
         else cosine_near_duplicates_lsh
     )
     return scorer(
@@ -1104,6 +1050,24 @@ def fit_coarse_centers(
     )
 
 
+def _cell_probe_udf(centers_n: np.ndarray, n: int):
+    """Arrow-batched IVF cell probe: per vector, the ids of the `n`
+    cells whose unit-norm centroids `centers_n` (n_cells x d) are
+    nearest by cosine, nearest first.  Shared by `ivf_topk` and
+    `pq.ivfpq_topk`."""
+    from pyspark.sql.types import ArrayType, IntegerType
+
+    @F.pandas_udf(ArrayType(IntegerType()))
+    def probe(vec_series: pd.Series) -> pd.Series:
+        mat = np.stack(vec_series.to_numpy()).astype(np.float64)  # (batch, d)
+        mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+        sims = mat @ centers_n.T  # (batch, n_cells)
+        top = np.argsort(-sims, axis=1)[:, :n]
+        return pd.Series(list(top.astype(np.int32)))
+
+    return probe
+
+
 def ivf_topk(
     embeddings: DataFrame,
     n_queries: int = 20,
@@ -1133,8 +1097,6 @@ def ivf_topk(
     Approximate by design (recall grows with n_probe); rows-only in the
     registry like the other ANN scale paths.
     """
-    from pyspark.sql.types import ArrayType, IntegerType
-
     _guard_query_bound(n_queries, MAX_BROADCAST_QUERIES, "ivf_topk")
 
     vecs = embeddings.select(F.col(id_col), F.col(vec_col))
@@ -1143,21 +1105,10 @@ def ivf_topk(
     # normalized centroids => nearest-by-cosine cell assignment
     centers_n = centers / np.maximum(np.linalg.norm(centers, axis=1, keepdims=True), 1e-12)
 
-    def _probe_udf(n: int):
-        @F.pandas_udf(ArrayType(IntegerType()))
-        def probe(vec_series: pd.Series) -> pd.Series:
-            mat = np.stack(vec_series.to_numpy()).astype(np.float64)  # (batch, d)
-            mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            sims = mat @ centers_n.T  # (batch, n_cells)
-            top = np.argsort(-sims, axis=1)[:, :n]
-            return pd.Series(list(top.astype(np.int32)))
-
-        return probe
-
     # Per-side norms once per row before the cell join (r13, guide §1.2):
     # per pair, each O(dim) self-dot fold ran per probed candidate pair.
     # Same fold over the same array — the rounded cosine is bit-identical.
-    cands = vecs.withColumn("cell", _probe_udf(1)(F.col(vec_col)).getItem(0)).select(
+    cands = vecs.withColumn("cell", _cell_probe_udf(centers_n, 1)(F.col(vec_col)).getItem(0)).select(
         F.col(id_col).alias("candidate_id"),
         F.col(vec_col).alias("cvec"),
         "cell",
@@ -1165,7 +1116,7 @@ def ivf_topk(
     )
     queries = (
         vecs.filter(F.col(id_col) < n_queries)
-        .withColumn("cell", F.explode(_probe_udf(n_probe)(F.col(vec_col))))
+        .withColumn("cell", F.explode(_cell_probe_udf(centers_n, n_probe)(F.col(vec_col))))
         .select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("qvec"),
@@ -1270,7 +1221,6 @@ def _with_hyperplane_bucket(
     n_planes: int,
     vec_col: str,
     keep_cols: list,
-    small_corpus_rows: int = 8192,
     use_gemm: "bool | None" = None,
 ) -> DataFrame:
     """keep_cols + packed sign-bit `bucket` (include `vec_col` in
@@ -1292,20 +1242,11 @@ def _with_hyperplane_bucket(
     in_cols = out_cols if vec_col in out_cols else out_cols + [vec_col]
     fields = {f.name: f.dataType.simpleString() for f in embeddings.schema.fields}
     if use_gemm is None:
-        use_gemm = not (
-            small_corpus_rows and _corpus_is_small(embeddings, small_corpus_rows)
-        )
+        use_gemm = routing.gemm_for_buckets(embeddings)
     if not use_gemm:
-        # Below the measured crossover the mapInPandas fixed costs
-        # (Arrow stage + worker roundtrip + the full-scan dim probe)
-        # exceed the fold savings: bench sf0.1 (2k vectors) read 0.69 s
-        # expression vs 1.02 s GEMM on the top-k path, while the 32k-row
-        # probe point already favored GEMM. Buckets are identical either
-        # way (parity-pinned), so the routing changes the plan only
-        # (two-sided callers force one decision via use_gemm instead of
-        # routing per side). The routing reads Catalyst plan statistics
-        # only (zero Spark jobs), so the large-corpus branch never pays
-        # a scan for it.
+        # Buckets are identical either way (parity-pinned), so the
+        # routing changes the plan only (two-sided callers force one
+        # decision via use_gemm instead of routing per side).
         return embeddings.select(
             *out_cols, _bucket_col(vec_col, n_planes).alias("bucket")
         )
@@ -1370,7 +1311,7 @@ def cosine_topk_lsh(
     # query side would always misread its stats as corpus-sized
     # anyway).  The query-side GEMM runs over MAX_BROADCAST_QUERIES
     # rows at most — one small Arrow batch.
-    use_gemm = not _corpus_is_small(embeddings, 8192)
+    use_gemm = routing.gemm_for_buckets(embeddings)
     queries = _with_hyperplane_bucket(
         embeddings.filter(F.col(id_col) < n_queries),
         n_planes,
@@ -1507,7 +1448,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scorer: str = "auto",
-    gemm_density_cutover: float = 50.0,
     gemm_block_elems: int = _GEMM_BLOCK_ELEMS,
     n_probes: int = 1,
 ) -> DataFrame:
@@ -1568,9 +1508,8 @@ def semantic_dedup(
     behind the final assignment — the assignment that produced the
     final centroids — which routing tolerates by construction: both
     scorers are verdict-identical, pytest-pinned, so the choice
-    changes the plan, never the result.)  Same cutover constant as
-    the banded selector (measured crossover ~50 candidate
-    pairs/vector, SCALE.md).
+    changes the plan, never the result.)  Same cutover as the banded
+    selector (`routing.gemm_for_pair_scoring`).
     """
     from . import clustering
 
@@ -1592,7 +1531,7 @@ def semantic_dedup(
             / max(n, 1)
             * (max(n_probes, 1) ** 2)
         )
-        scorer = "gemm" if density >= gemm_density_cutover else "expr"
+        scorer = "gemm" if routing.gemm_for_pair_scoring(density) else "expr"
     else:
         assigned, centroids = clustering.kmeans(
             embeddings, k=n_clusters, max_iter=kmeans_iter, id_col=id_col, vec_col=vec_col

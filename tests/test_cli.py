@@ -134,19 +134,19 @@ def test_cli_curate_auto_size_applies_and_restores_width(
     48g bind band the CLI's default auto-sizing must run the near-dup
     stage at the helper's 128 and put the session width back before the
     command returns; --no-auto-size must leave the conf untouched."""
-    from tagmarshal_data_lakehouse_spark.training import dedup
+    from tagmarshal_data_lakehouse_spark import routing
 
     original = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setattr(dedup, "jvm_heap_gib", lambda _s: 48.0)
+    monkeypatch.setattr(routing, "jvm_heap_gib", lambda _s: 48.0)
     seen = {}
-    real_size = dedup.size_session_for_dedup
+    real_size = routing.size_session
 
-    def forced(s, n_docs):
-        w = real_size(s, 4_096_000)  # the measured 8192x/48g bind point
+    def forced(s, operator, rows):
+        w = real_size(s, operator, 4_096_000)  # the measured 8192x/48g bind point
         seen["width"] = w
         return w
 
-    monkeypatch.setattr(dedup, "size_session_for_dedup", forced)
+    monkeypatch.setattr(routing, "size_session", forced)
     out = str(tmp_path / "curated_sz")
     assert main([
         "--warehouse", str(tmp_path / "wh"),

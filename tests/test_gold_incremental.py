@@ -322,3 +322,19 @@ def test_partially_retracted_course_drops_per_table_rollup_state(spark, tmp_path
     assert {
         r["device_id"] for r in lake.read("gold.dim_device").collect()
     } == only_b_devices
+
+
+def test_every_global_model_has_a_combiner(spark):
+    """`incremental_update` derives every model without a course_id
+    column from its `rollups.COMBINERS` entry; it has no other refresh
+    path for them.  Only the schemas matter, so the DAG is built on an
+    empty fact."""
+    from tagmarshal_data_lakehouse_spark.gold.rollups import COMBINERS
+    from tagmarshal_data_lakehouse_spark.schemas import FACT_TELEMETRY_EVENT
+
+    models = GoldBuilder(spark, cache_fact_rounds=False).build(
+        spark.createDataFrame([], FACT_TELEMETRY_EVENT)
+    )
+    global_models = {n for n, df in models.items() if "course_id" not in df.columns}
+    assert global_models
+    assert global_models <= set(COMBINERS)

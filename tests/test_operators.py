@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tagmarshal_data_lakehouse_spark.operators import salted_join, two_phase_distinct
+from tagmarshal_data_lakehouse_spark.plans import physical_plan
 
 
 def _skewed(spark):
@@ -73,7 +74,7 @@ def test_bloom_semi_join_superset_and_shuffle_free(spark):
     assert not (true_keys & anti_got)            # every true match dropped
     assert len(anti_got) >= 5000 - len(true_keys) - 50
 
-    plan = semi._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(semi)
     assert "Join" not in plan and "Exchange" not in plan
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tagmarshal_data_lakehouse_spark.plans import physical_plan
 from tagmarshal_data_lakehouse_spark.queries import registry
 from tagmarshal_data_lakehouse_spark.training import sampling
 
@@ -29,7 +30,7 @@ def test_split_is_total_and_stable(docs):
 
 
 def test_split_no_shuffle(docs):
-    plan = sampling.train_val_test_split(docs)._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(sampling.train_val_test_split(docs))
     assert "Exchange" not in plan  # row-local projection only
 
 
@@ -90,13 +91,7 @@ def test_asof_join_semantics(spark, sf_smoke):
 
 
 def test_asof_join_single_shuffle(spark, sf_smoke):
-    plan = (
-        registry()["events_asof_join"]
-        .build(spark, sf_smoke)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = physical_plan(registry()["events_asof_join"].build(spark, sf_smoke))
     # window carry: user_id exchanges only (dedup + carry share the key),
     # never a join operator
     assert "Join" not in plan
@@ -146,10 +141,7 @@ def test_epoch_shuffle_no_single_partition_window_on_data(docs):
     """The corpus-side window must partition by the hash-prefix bucket;
     the only single-partition stage allowed is the 256-row offsets
     aggregate (that frame is bounded by construction, not by data)."""
-    plan = (
-        sampling.epoch_shuffle(docs, epoch=0)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan = physical_plan(sampling.epoch_shuffle(docs, epoch=0))
     # the big-side window runs per-bucket
     assert "partitionspec" not in plan.lower() or "_bucket" in plan
     import re

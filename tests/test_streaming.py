@@ -755,7 +755,7 @@ def test_suggest_stream_shuffle_partitions_pins_measured_points():
     kind with a measured bind and hold the default for the rest."""
     import pytest as _pytest
 
-    from tagmarshal_data_lakehouse_spark.streaming import (
+    from tagmarshal_data_lakehouse_spark.routing import (
         suggest_stream_shuffle_partitions as s,
     )
 
@@ -792,14 +792,13 @@ def test_stateful_builders_apply_stream_sizing_before_plan_build(spark):
     count at start and is checkpointed); sessions and dedup — kinds
     with NO measured bind, where the r13 rerun proved widening 1.6x
     harmful — must hold the width even at huge estimates; and
-    restore_stream_session_width must put the session back."""
+    restore_session_width must put the session back."""
+    from tagmarshal_data_lakehouse_spark import routing
     from tagmarshal_data_lakehouse_spark.streaming import (
-        restore_stream_session_width,
         stream_dedup_within_watermark,
         stream_interval_join,
         stream_session_windows,
     )
-    from tagmarshal_data_lakehouse_spark.streaming import sizing as sz
 
     original = spark.conf.get("spark.sql.shuffle.partitions")
     events = (
@@ -831,15 +830,15 @@ def test_stateful_builders_apply_stream_sizing_before_plan_build(spark):
         # puts the session back
         stream_interval_join(events, state_rows_estimate=163_622_912)
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 128
-        assert restore_stream_session_width(spark) == int(original)
+        assert routing.restore_session_width(spark) == int(original)
         assert spark.conf.get("spark.sql.shuffle.partitions") == original
         # no estimate -> conf untouched (the default path costs nothing)
         stream_interval_join(events)
         assert spark.conf.get("spark.sql.shuffle.partitions") == original
-        assert restore_stream_session_width(spark) is None
+        assert routing.restore_session_width(spark) is None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", original)
-        for k in (sz._STREAM_BASELINE_KEY, sz._STREAM_LAST_SET_KEY):
+        for k in (routing._BASELINE_KEY, routing._LAST_SET_KEY):
             try:
                 spark.conf.unset(k)
             except Exception:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tagmarshal_data_lakehouse_spark.plans import physical_plan
 from tagmarshal_data_lakehouse_spark.training import curation
 
 
@@ -170,7 +171,7 @@ def test_decontaminate_bloom_plan_is_shuffle_free(spark):
         "doc_id long, text string",
     )
     out = curation.decontaminate_bloom(corpus, eval_set, ngram=5)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(out)
     assert "Join" not in plan  # membership is an expression, not a join
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tagmarshal_data_lakehouse_spark import routing
 from tagmarshal_data_lakehouse_spark.training import dedup
 
 
@@ -537,7 +538,7 @@ def test_suggest_dedup_shuffle_partitions_pins_measured_band():
     because the same sweep there was monotonically worse with width
     (386.5/468.0/567.4 s at 32/128/256) — widening is validated only on
     executor-class heaps."""
-    s = dedup.suggest_dedup_shuffle_partitions
+    s = routing.suggest_dedup_shuffle_partitions
     # comfortable heap: default width stands (4.096M docs @ 100g was
     # measured linear, exponent 1.07; 2.048M @ 48g in-band)
     assert s(4_096_000, 100, 32) == 32
@@ -567,57 +568,72 @@ def test_suggest_dedup_shuffle_partitions_pins_measured_band():
             s(*bad)
 
 
-def test_size_session_for_dedup_sets_and_restores(spark):
-    """size_session_for_dedup turns the measurement into behavior: it
-    sets the session shuffle width to the suggestion and returns it;
-    a comfortable estimate is a no-op."""
+def test_size_session_for_dedup_sets_and_restores(spark, monkeypatch):
+    """routing.size_session turns the dedup measurement into behavior:
+    it sets the session shuffle width to the suggestion and returns it;
+    a comfortable estimate is a no-op.  The baseline is shared by every
+    operator kind, so a stream sized after a widened dedup never
+    inherits the dedup's width."""
     original = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        heap = dedup.jvm_heap_gib(spark)
+        heap = routing.jvm_heap_gib(spark)
         assert heap > 0
         # small corpus: no-op (returns the current default unchanged)
-        got = dedup.size_session_for_dedup(spark, 1_000)
+        got = routing.size_session(spark, routing.MINHASH_DEDUP, 1_000)
         assert got == int(original)
         assert spark.conf.get("spark.sql.shuffle.partitions") == original
         # past the bind ratio for this session's heap: widens
-        n_bound = int(dedup._DEDUP_HEAP_DOCS_PER_GIB * heap * 4)
-        got = dedup.size_session_for_dedup(spark, n_bound)
-        expect = dedup.suggest_dedup_shuffle_partitions(n_bound, heap, int(original))
+        n_bound = int(routing._DEDUP_HEAP_DOCS_PER_GIB * heap * 4)
+        got = routing.size_session(spark, routing.MINHASH_DEDUP, n_bound)
+        expect = routing.suggest_dedup_shuffle_partitions(n_bound, heap, int(original))
         assert got == expect
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == expect
         assert got >= int(original)
         # no ratchet: a later small-corpus call sizes from the PRE-sizing
         # baseline, narrowing back instead of reading the widened value
         # as the new default
-        got = dedup.size_session_for_dedup(spark, 1_000)
+        got = routing.size_session(spark, routing.MINHASH_DEDUP, 1_000)
         assert got == int(original)
         assert spark.conf.get("spark.sql.shuffle.partitions") == original
         # and the explicit restore is a no-op-safe way back
-        dedup.size_session_for_dedup(spark, n_bound)
-        assert dedup.restore_session_width(spark) == int(original)
+        routing.size_session(spark, routing.MINHASH_DEDUP, n_bound)
+        assert routing.restore_session_width(spark) == int(original)
         assert spark.conf.get("spark.sql.shuffle.partitions") == original
 
         # a user-set width BETWEEN sizing calls becomes the new
         # baseline (detected because it differs from the last value
         # sizing wrote) ...
-        widened = dedup.size_session_for_dedup(spark, n_bound)
+        widened = routing.size_session(spark, routing.MINHASH_DEDUP, n_bound)
         user_width = widened + 7  # distinguishable from our own write
         spark.conf.set("spark.sql.shuffle.partitions", str(user_width))
-        got = dedup.size_session_for_dedup(spark, 1_000)
+        got = routing.size_session(spark, routing.MINHASH_DEDUP, 1_000)
         assert got == user_width  # user's width adopted, not reverted
         # ... and the DOCUMENTED blind spot: a user width EQUAL to the
         # last auto-set value must be preceded by restore_session_width
         # (Spark conf records values, not writers — ADVICE r12); with
         # the restore-first protocol the user width is re-captured.
-        dedup.restore_session_width(spark)
+        routing.restore_session_width(spark)
         spark.conf.set("spark.sql.shuffle.partitions", str(user_width))
-        got = dedup.size_session_for_dedup(spark, 1_000)
+        got = routing.size_session(spark, routing.MINHASH_DEDUP, 1_000)
         assert got == user_width
-        assert int(spark.conf.get(dedup._DEDUP_BASELINE_KEY)) == user_width
+        assert int(spark.conf.get(routing._BASELINE_KEY)) == user_width
+
+        # no cross-kind ratchet: after the dedup widens to 128 at the
+        # measured 48g bind, a session_window stream below its onset
+        # sizes from the ORIGINAL width (sessions ran 1.6x slower at
+        # 128), and one restore returns the original
+        routing.restore_session_width(spark)
+        spark.conf.set("spark.sql.shuffle.partitions", original)
+        monkeypatch.setattr(routing, "jvm_heap_gib", lambda _s: 48.0)
+        assert routing.size_session(spark, routing.MINHASH_DEDUP, 4_096_000) == 128
+        assert routing.size_session(spark, "session_window", 1_000) == int(original)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == original
+        assert routing.restore_session_width(spark) == int(original)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == original
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", original)
-        spark.conf.unset(dedup._DEDUP_BASELINE_KEY)
-        spark.conf.unset(dedup._DEDUP_LAST_SET_KEY)
+        spark.conf.unset(routing._BASELINE_KEY)
+        spark.conf.unset(routing._LAST_SET_KEY)
 
 
 def test_minhash_dedup_verdict_auto_size_applies_measured_width(spark, monkeypatch):
@@ -628,7 +644,7 @@ def test_minhash_dedup_verdict_auto_size_applies_measured_width(spark, monkeypat
     an 8M-doc run; verdicts stay correct and restore_session_width puts
     the session back."""
     original = spark.conf.get("spark.sql.shuffle.partitions")
-    monkeypatch.setattr(dedup, "jvm_heap_gib", lambda _s: 48.0)
+    monkeypatch.setattr(routing, "jvm_heap_gib", lambda _s: 48.0)
     handles: list = []
     try:
         out = dedup.minhash_dedup_verdicts(
@@ -645,13 +661,13 @@ def test_minhash_dedup_verdict_auto_size_applies_measured_width(spark, monkeypat
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 128
         rows = {r["doc_id"]: (r["keep"], r["dup_of"]) for r in out.collect()}
         assert rows == {1: (True, None), 2: (False, 1), 3: (True, None)}
-        assert dedup.restore_session_width(spark) == int(original)
+        assert routing.restore_session_width(spark) == int(original)
         assert spark.conf.get("spark.sql.shuffle.partitions") == original
     finally:
         for h in handles:
             h.unpersist()
         spark.conf.set("spark.sql.shuffle.partitions", original)
-        spark.conf.unset(dedup._DEDUP_BASELINE_KEY)
+        spark.conf.unset(routing._BASELINE_KEY)
 
 
 def test_jvm_heap_gib_parses_units(spark):
@@ -661,7 +677,7 @@ def test_jvm_heap_gib_parses_units(spark):
     bare number meaning MiB (Spark's memory-conf default unit), NOT
     bytes: decoding '4096' as bytes would classify a comfortable 4 GiB
     heap as microscopically small and widen every dedup run."""
-    heap = dedup.jvm_heap_gib(spark)
+    heap = routing.jvm_heap_gib(spark)
     assert 0 < heap < 4_096  # the live session reads sanely
 
     class _Conf:
@@ -690,9 +706,9 @@ def test_jvm_heap_gib_parses_units(spark):
         ("4096k", 4096 / 1024**2),
     ]
     for raw, want in cases:
-        assert abs(dedup.jvm_heap_gib(_Spark(raw)) - want) < 1e-9, raw
+        assert abs(routing.jvm_heap_gib(_Spark(raw)) - want) < 1e-9, raw
     with _pytest.raises(ValueError):
-        dedup.jvm_heap_gib(_Spark("lots"))
+        routing.jvm_heap_gib(_Spark("lots"))
 
 
 def test_bigram_lm_scores_empty_model_corpus_raises(spark):
@@ -759,12 +775,10 @@ def test_minhash_numpy_twin_parity(spark, sf_smoke, monkeypatch):
     two-argument xxhash64 chaining (hashLong(sd, hashLong(h, 42))) and
     the NULL/empty-gram [NULL]*num_perm shape — pinned by forcing both
     routing branches over real and adversarial corpora."""
-    from tagmarshal_data_lakehouse_spark.training import clustering, dedup
-
     docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
-    monkeypatch.setattr(clustering, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 10**18)  # expression
+    monkeypatch.setattr(routing, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 10**18)  # expression
     a = dedup.minhash_signatures(docs, keep_gram_hashes=True).collect()
-    monkeypatch.setattr(clustering, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 0)  # numpy twin
+    monkeypatch.setattr(routing, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 0)  # numpy twin
     b = dedup.minhash_signatures(docs, keep_gram_hashes=True).collect()
     da = {r["doc_id"]: (list(r["sig"]), list(r["gram_hashes"])) for r in a}
     db = {r["doc_id"]: (list(r["sig"]), list(r["gram_hashes"])) for r in b}
@@ -772,9 +786,9 @@ def test_minhash_numpy_twin_parity(spark, sf_smoke, monkeypatch):
 
     rows = [(1, None), (2, ""), (3, "one"), (4, "a b c d e f g"), (5, "x " * 500)]
     edf = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setattr(clustering, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 10**18)
+    monkeypatch.setattr(routing, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 10**18)
     ea = dedup.minhash_signatures(edf).collect()
-    monkeypatch.setattr(clustering, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 0)
+    monkeypatch.setattr(routing, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 0)
     eb = dedup.minhash_signatures(edf).collect()
     ca = {r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None) for r in ea}
     cb = {r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None) for r in eb}

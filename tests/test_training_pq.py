@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tagmarshal_data_lakehouse_spark.plans import physical_plan
 from tagmarshal_data_lakehouse_spark.training import pq, similarity
 
 
@@ -112,7 +113,7 @@ def test_ivfpq_probing_recall_and_plan(embs):
     approx_set = {(r["query_id"], r["candidate_id"]) for r in approx.collect()}
     assert len(approx_set & full_set) >= int(0.4 * len(full_set))
 
-    plan = approx._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(approx)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BroadcastHashJoin" in plan
@@ -148,7 +149,7 @@ def test_ivfpq_residual_mode_recall_and_determinism(spark):
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, again))
 
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = physical_plan(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BroadcastHashJoin" in plan

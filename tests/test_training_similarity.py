@@ -9,6 +9,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from tagmarshal_data_lakehouse_spark import routing
+from tagmarshal_data_lakehouse_spark.plans import physical_plan
 from tagmarshal_data_lakehouse_spark.training import similarity
 
 
@@ -151,7 +153,7 @@ def test_gemm_bucket_matches_expression_twin(planted):
     got = {
         r["vec_id"]: r["bucket"]
         for r in similarity._with_hyperplane_bucket(
-            planted, n_planes, "embedding", ["vec_id"], small_corpus_rows=0
+            planted, n_planes, "embedding", ["vec_id"], use_gemm=True
         ).collect()
     }
     want = {
@@ -183,17 +185,17 @@ def test_single_band_bucket_routes_by_corpus_size(planted, tmp_path, monkeypatch
     # unknown → expression branch
     unknown = similarity._with_hyperplane_bucket(planted, 6, "embedding", ["vec_id"])
     forced = similarity._with_hyperplane_bucket(
-        filed, 6, "embedding", ["vec_id"], small_corpus_rows=0
+        filed, 6, "embedding", ["vec_id"], use_gemm=True
     )
-    assert "MapInPandas" not in small._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in unknown._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in forced._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in physical_plan(small)
+    assert "MapInPandas" not in physical_plan(unknown)
+    assert "MapInPandas" in physical_plan(forced)
     assert {tuple(r) for r in small.collect()} == {tuple(r) for r in forced.collect()}
-    assert similarity._corpus_is_small(planted, 8192)  # unknown stats → small
-    assert similarity._corpus_is_small(filed, 8192)
-    # mapInPandas output also reports the sentinel → small, not large
+    assert not routing.gemm_for_buckets(planted)  # unknown stats → expression
+    assert not routing.gemm_for_buckets(filed)
+    # mapInPandas output also reports the sentinel → expression
     mapped = similarity._banded_exploded(filed, 2, 3, "vec_id", "embedding")
-    assert similarity._corpus_is_small(mapped, 8192)
+    assert not routing.gemm_for_buckets(mapped)
     # cosine_topk_lsh decides ONCE on the corpus and forces the same
     # branch on BOTH join sides — a near-zero sign decision may differ
     # between the fold and the matmul, so mixed-implementation sides
@@ -201,17 +203,11 @@ def test_single_band_bucket_routes_by_corpus_size(planted, tmp_path, monkeypatch
     # anywhere; a corpus the stats read as LARGE (pinned by stubbing the
     # routing — a real >8k-row file fixture would dominate suite time):
     # a barrier on each side (query + candidate), never one.
-    plan_small = (
-        similarity.cosine_topk_lsh(filed, n_queries=5, k=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    plan_small = physical_plan(similarity.cosine_topk_lsh(filed, n_queries=5, k=2))
     assert plan_small.count("MapInPandas") == 0
     small_rows = {tuple(r) for r in similarity.cosine_topk_lsh(filed, n_queries=5, k=2).collect()}
-    monkeypatch.setattr(similarity, "_corpus_is_small", lambda df, threshold_rows: False)
-    plan_large = (
-        similarity.cosine_topk_lsh(planted, n_queries=5, k=2)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    monkeypatch.setattr(routing, "gemm_for_buckets", lambda df: True)
+    plan_large = physical_plan(similarity.cosine_topk_lsh(planted, n_queries=5, k=2))
     assert plan_large.count("MapInPandas") == 2
     large_rows = {tuple(r) for r in similarity.cosine_topk_lsh(planted, n_queries=5, k=2).collect()}
     assert small_rows == large_rows
@@ -284,7 +280,7 @@ def test_gemm_bucket_degenerate_rows_match_expression_twin(degenerate):
     got = {
         r["vec_id"]: r["bucket"]
         for r in similarity._with_hyperplane_bucket(
-            degenerate, n_planes, "embedding", ["vec_id"], small_corpus_rows=0
+            degenerate, n_planes, "embedding", ["vec_id"], use_gemm=True
         ).collect()
     }
     want = {
@@ -536,7 +532,7 @@ def test_auto_planes_resolution_tracks_corpus_size(spark, sf_smoke):
     # Catalyst's own estimate
     import math
 
-    est = similarity._estimated_rows(embs)
+    est = routing.estimated_rows(embs)
     assert est is not None and est > 0
     expected = max(3, min(20, math.ceil(math.log2(max(est / 100, 1.0)))))
     res = similarity.resolve_planes_per_band(embs, "auto")

@@ -142,6 +142,7 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from tagmarshal_data_lakehouse_spark import routing
     from tagmarshal_data_lakehouse_spark.training import dedup, sampling, similarity, text
 
     def sessionize(ev):
@@ -375,12 +376,12 @@ def main() -> int:
             embs = amplify_embeddings(spark, sf_dir, reps).persist()
             n_embs = embs.count()
         # SCALE_PROBE_AUTO_PARTS=1: let the measured heap-bind helper
-        # (dedup.size_session_for_dedup, r10 sixth-octave arithmetic)
+        # (routing.size_session, r10 sixth-octave arithmetic)
         # pick the shuffle width from the actual doc count — the
         # behavior a dedup-verdict deployment gets, instead of the
         # probe's fixed SCALE_PROBE_SHUFFLE_PARTS knob.
         if os.environ.get("SCALE_PROBE_AUTO_PARTS") and n_docs is not None:
-            width = dedup.size_session_for_dedup(spark, n_docs)
+            width = routing.size_session(spark, routing.MINHASH_DEDUP, n_docs)
             print(json.dumps({"auto_parts": width, "reps": reps}), flush=True)
         for name, op in operators.items():
             t0 = time.monotonic()

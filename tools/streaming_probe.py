@@ -281,7 +281,7 @@ def main() -> int:
         "sessions": (lambda s: se.stream_session_windows(s, watermark=WM), "append"),
         "dedup": (lambda s: se.stream_dedup_within_watermark(s, watermark=WM), "update"),
         # STREAM_PROBE_STATE_ROWS=<int>: pass a state_rows_estimate so
-        # the r13-build sizing plumb (sizing.size_session_for_stream)
+        # the r13-build sizing plumb (routing.size_session)
         # engages — the with/without pair is the VERDICT r13 item 8
         # spot-check that the measured 1.9x store-width win survives
         # the operator-parameter plumbing.
