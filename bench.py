@@ -19,53 +19,28 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.analytics import HEADLINE  # noqa: E402
 from tagmarshal_data_lakehouse_spark.queries import registry  # noqa: E402
 from tagmarshal_data_lakehouse_spark.session import get_spark  # noqa: E402
 
-# Headline set: one representative per operator family, weighted toward
+# Headline set (perfbench.analytics.HEADLINE, shared with the analytics
+# workload): one representative per operator family, weighted toward
 # the scans/joins/aggs that dominate real workloads. Rows-only extras
-# (minhash, lsh) are included because dedup IS a headline capability here.
-HEADLINE = [
-    "agg_pricing_summary",
-    "agg_global",
-    "agg_percentile",
-    "join_multiway",
-    "join_broadcast",
-    "join_range_broadcast",
-    "window_dedup",
-    "window_topn",
-    "events_sessionize",
-    "events_tumbling_window",
-    "doc_dedup_exact",
-    "doc_incremental_dedup",
-    "doc_curation_pipeline",
-    "doc_chunk_windows",
-    "doc_token_stats",
-    "doc_minhash_near_dups",
-    "emb_cosine_topk_lsh",
-    "events_asof_join",
-    "doc_train_split",
-    # TPC-H subset: the canonical multi-join/agg OLAP shapes — scan-heavy
-    # filter+agg (q6), join+topk (q3), 6-way dim stitch (q5), large
-    # group-by with HAVING semi-join (q18)
-    "tpch_q3",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q18",
-    # mergeable-sketch rollup: the pre-aggregated distinct-count scale path
-    "events_hll_rollup",
-    # round-4 additions: sparse lexical similarity (fractional-df-capped
-    # inverted index), keyword extraction, weighted sampling
-    "doc_tf_cosine_pairs",
-    "doc_corpus_keywords",
-    "doc_weighted_sample",
-    # hard-negative mining, LSH scale path (broadcast query side)
-    "emb_hard_negatives_lsh",
-    # chunked interval overlap join (sessions x busy-hour islands)
-    "events_interval_join",
-    # exact cosine top-k at GEMM throughput (mapInPandas matmul prune)
-    "emb_cosine_topk_gemm",
-]
+# (minhash, lsh) are included because dedup IS a headline capability
+# here. Beyond the relational, events and document families:
+# - the TPC-H subset: the canonical multi-join/agg OLAP shapes —
+#   scan-heavy filter+agg (q6), join+topk (q3), 6-way dim stitch (q5),
+#   large group-by with HAVING semi-join (q18);
+# - events_hll_rollup: the mergeable-sketch rollup, the pre-aggregated
+#   distinct-count scale path;
+# - round-4 additions: sparse lexical similarity (fractional-df-capped
+#   inverted index), keyword extraction, weighted sampling;
+# - emb_hard_negatives_lsh: hard-negative mining, LSH scale path
+#   (broadcast query side);
+# - events_interval_join: chunked interval overlap join (sessions x
+#   busy-hour islands);
+# - emb_cosine_topk_gemm: exact cosine top-k at GEMM throughput
+#   (mapInPandas matmul prune).
 
 
 def _disk_read_mbps(sf_dir: str) -> float | None:

@@ -926,10 +926,19 @@ class GoldBuilder:
         dim_facility_topology.createOrReplaceTempView("dim_facility_topology")
 
         for model in MODELS:  # MODELS is already topologically ordered
-            df = self.spark.sql(model.sql)
+            # A SQL view keeps the model's text, so each reference is
+            # analyzed afresh with CTE ids of its own.  A view of the
+            # analyzed DataFrame would carry its CTE definitions, ids
+            # included, into every model that reads it (fact_rounds
+            # reaches gold_coverage_audit by several paths), and Spark's
+            # InlineCTE keys definitions by id alone: whether the
+            # optimizer then failed with "Invalid call to exprId on
+            # unresolved object" depended on how many CTE ids the JVM
+            # had handed out before the build.
+            self.spark.sql(f"CREATE OR REPLACE TEMP VIEW {model.name} AS {model.sql}")
+            df = self.spark.table(model.name)
             if model.name == "fact_rounds" and self.cache_fact_rounds:
                 df = df.cache()
-            df.createOrReplaceTempView(model.name)
             self.built[model.name] = df
         return self.built
 

@@ -3,6 +3,10 @@ indistinguishable from a full rebuild."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,6 +121,47 @@ def test_incremental_absorbs_new_partition(spark, lake_with_gold, tmp_path):
         lake.overwrite(f"gold.{name}", df, partition_by=part)
     full = _snapshot(spark, lake, names)
     _assert_snapshots_match(inc, full)
+
+
+# A fresh driver that hands out CTE ids 0-5 before the gold build: with
+# the models registered as views of analyzed DataFrames, this exact
+# state made every plan reading gold_coverage_audit fail in the
+# optimizer (InlineCTE -> DeduplicateRelations: "Invalid call to exprId
+# on unresolved object").  Earlier test files reached it by building
+# events_asof_join twice, so the suite failed or passed by file order.
+_PRIOR_CTE_IDS_SCRIPT = """
+import pathlib, sys, tempfile
+from tagmarshal_data_lakehouse_spark.gold.models import GoldBuilder
+from tagmarshal_data_lakehouse_spark.session import get_spark
+from tagmarshal_data_lakehouse_spark.storage import Lakehouse
+from tests.test_gold_incremental import _silver_fact
+
+spark = get_spark(app_name="gold-cte-ids", shuffle_partitions=2, driver_memory="1g")
+for _ in range(6):
+    spark.sql("WITH a AS (SELECT 1 AS x) SELECT x FROM a")
+tmp = pathlib.Path(tempfile.mkdtemp(dir=sys.argv[1]))
+lake = Lakehouse(spark, str(tmp / "warehouse"))
+fact = _silver_fact(spark, tmp, ["course_a", "course_b", "course_c"])
+lake.replace_partitions(
+    "silver.fact_telemetry_event", fact, ["course_id", "ingest_date", "event_date"]
+)
+for name, df in GoldBuilder(spark).build(lake.read("silver.fact_telemetry_event")).items():
+    df._jdf.queryExecution().optimizedPlan()
+print("built")
+"""
+
+
+def test_gold_build_does_not_depend_on_prior_cte_ids(tmp_path):
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _PRIOR_CTE_IDS_SCRIPT, str(tmp_path)],
+        env=dict(os.environ, PYTHONPATH=repo),
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0 and "built" in proc.stdout, proc.stderr[-3000:]
 
 
 def test_incremental_leaves_untouched_courses_alone(spark, lake_with_gold):

@@ -6,8 +6,8 @@ one day holding a large fraction of the intervals — is the join's
 natural skew risk: per-key work is |L_chunk|·|R_chunk| comparisons
 handled by however many tasks the key spreads over (one, unless AQE
 splits it). This probe measures three scenarios at increasing
-adversity, each under the production session confs (AQE + skew-join
-enabled, like tools/scale_probe.py):
+adversity, each under the production session (AQE + skew-join enabled,
+tools/amplify.py probe_session):
 
 - uniform:  L spread over 30 days, R bounded per day (the registry
             `events_interval_join` shape — islands per chunk bounded
@@ -43,20 +43,11 @@ def main() -> int:
     n_left = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     n_right = int(sys.argv[2]) if len(sys.argv) > 2 else 4_000
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .appName("interval-skew-probe")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from tools.amplify import probe_session
+
+    spark = probe_session("interval-skew-probe")
 
     from tagmarshal_data_lakehouse_spark.operators import interval_overlap_join
 

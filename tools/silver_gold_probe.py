@@ -5,26 +5,24 @@ Every octave probe so far (SCALE.md) targeted the training/events/
 relational families; the silver transform + gold build is the path the
 reference actually ships (design target 650 courses x 7 years,
 pipeline/silver/etl.py:640) and until this probe its 100x behavior was
-asserted from plan shape, not measured. Two timed phases per scale:
+asserted from plan shape, not measured. Timed phases per scale:
 
 - silver: read_rounds (multiLine JSON) -> transform_rounds in the
   multi-ingest micro-batch shape (course_id = F.col("course"), ONE
-  transform over every course at once) -> split_coordinates ->
-  replace_partitions on (course_id, ingest_date, event_date) — the
-  exact production write, quarantine sink included;
+  transform over every course at once) -> silver.land_fixes, the
+  production one-pass landing: replace_partitions on (course_id,
+  ingest_date, event_date), quarantine sink included;
 - gold: read the written fact back (fresh scan, no lingering lineage)
   -> GoldBuilder.build_all -> count() every model. This exercises W1's
   window dedup upstream and the coverage audit's multi-way join at
-  depth, with the fact_rounds cache on (the production default).
+  depth, with the fact_rounds cache on (the production default);
+- incremental: land the refresh course-day, then incremental_update
+  for its course (the one-off rollup seed is timed apart).
 
-Amplification grows BOTH axes like the reference's own growth (more
-courses x more rounds per course): courses = 4*sqrt(reps),
-rounds/course = 50*sqrt(reps), 36 fixes per round — reps 1/16/64/256
--> 7.2k/115k/461k/1.84M fixes. Content is deterministic (pure
-arithmetic on indices, no RNG) and carries the transform's real work:
-~1/16 duplicate cached fixes (W1), ~1/32 out-of-bounds coordinates
-(quarantine), ~1/16 rounds with no startTime (NULL-timestamp flags),
-1/8 nine-hole rounds, endTime present for ~7/8.
+The bronze input is tools/amplify.py bronze_corpus (perfbench's
+seeded bronze_gen: courses and rounds per course both grow with
+sqrt(reps), plus one refresh course-day); the probe asserts that silver
+lands exactly the generator's valid and quarantined fix counts.
 
 Run:  PYTHONPATH=/root/repo python tools/silver_gold_probe.py [reps...]
 Env:  SILVER_PROBE_WORKDIR (default /tmp/silver_gold_probe),
@@ -36,8 +34,6 @@ Env:  SILVER_PROBE_WORKDIR (default /tmp/silver_gold_probe),
 
 from __future__ import annotations
 
-import json
-import math
 import os
 import shutil
 import sys
@@ -45,130 +41,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-BASE_COURSES = 4
-BASE_ROUNDS = 50
-LOCS_PER_ROUND = 36
-ROUNDS_PER_FILE = 1000
-DATE_SPREAD_DAYS = 30  # event_date partitions per course, production-like
-
-
-def _round_doc(course_idx: int, round_idx: int) -> dict:
-    """One deterministic bronze round document. Pure arithmetic on the
-    indices — regenerating any scale reproduces byte-identical input."""
-    import datetime as dt
-
-    g = course_idx * 1_000_003 + round_idx  # per-round mixing constant
-    day = g % DATE_SPREAD_DAYS
-    start = dt.datetime(2024, 1, 1) + dt.timedelta(
-        days=day, hours=6 + g % 12, minutes=(g * 7) % 60
-    )
-    nine_hole = g % 8 == 0
-    n_locs = LOCS_PER_ROUND // 2 if nine_hole else LOCS_PER_ROUND
-    locs = []
-    for i in range(n_locs):
-        lon = -122.1 + ((g + i) % 900) * 0.001
-        lat = 45.6 + ((g * 3 + i) % 900) * 0.001
-        if (g + i) % 32 == 0:  # quarantine bait: out-of-bounds latitude
-            lat = 95.0 + (i % 5)
-        loc = {
-            "hole": (i // 2) + 1,
-            "sectionNumber": i + 1,
-            "holeSection": (i % 2) + 1,
-            "startTime": 55.0 * i + (g % 11),
-            "fixCoordinates": [lon, lat],
-            "isProjected": i % 5 == 0,
-            "isProblem": (g + i) % 97 == 0,
-            "isCache": i % 4 == 0,
-            "paceGap": round(0.5 + i * 0.1 + (g % 7) * 0.01, 3),
-            "positionalGap": 0.3,
-            "pace": round(4.0 + i * 0.05, 3),
-            "batteryPercentage": float(95 - i),
-        }
-        locs.append(loc)
-        if (g + i) % 16 == 0:  # W1 bait: duplicate fix, cached + lower battery
-            dup = dict(loc)
-            dup["isCache"] = True
-            dup["batteryPercentage"] = float(80 - i)
-            locs.append(dup)
-    doc = {
-        "_id": f"r{course_idx:04d}x{round_idx:06d}",
-        "course": f"course{course_idx:04d}",
-        "startHole": 10 if g % 16 == 0 else 1,
-        "startSection": 1,
-        "endSection": 13 if nine_hole else 27,
-        "isNineHole": nine_hole,
-        "complete": g % 5 != 0,
-        "goalTime": 15840 + (g % 100) * 10,
-        "currentNine": 1 + g % 2,
-        "device": f"dev-{g % 500}",
-        "goalName": "Default",
-        "goalTimeFraction": 0.5,
-        "isIncomplete": g % 5 == 0,
-        "isSecondary": g % 13 == 0,
-        "isAutoAssigned": g % 17 == 0,
-        "lastSectionStart": float((g * 13) % 900),
-        "currentSection": 1 + g % 27,
-        "currentHole": 1 + g % 18,
-        "currentHoleSection": 1 + g % 2,
-        "locations": locs,
-    }
-    if g % 16 != 1:  # ~1/16 rounds carry no usable timestamps
-        doc["startTime"] = start.strftime("%Y-%m-%dT%H:%M:%SZ")
-        if g % 8 != 2:  # of those, ~7/8 also have an end
-            doc["endTime"] = (start + dt.timedelta(seconds=doc["goalTime"])).strftime(
-                "%Y-%m-%dT%H:%M:%SZ"
-            )
-    return doc
-
-
-def generate_input(workdir: str, reps: int) -> tuple[str, int]:
-    """Write the amplified bronze corpus as chunked multiLine JSON-array
-    files (the S2 shape read_rounds autodetects). Returns (dir, rounds)."""
-    scale = int(math.isqrt(reps))
-    assert scale * scale == reps, f"reps must be a perfect square, got {reps}"
-    n_courses = BASE_COURSES * scale
-    n_rounds = BASE_ROUNDS * scale
-    path = os.path.join(workdir, f"bronze_{reps}x")
-    if os.path.isdir(path):  # deterministic content: reuse across runs
-        return path, n_courses * n_rounds
-    tmp = path + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    buf: list[dict] = []
-    n_files = 0
-    for c in range(n_courses):
-        for r in range(n_rounds):
-            buf.append(_round_doc(c, r))
-            if len(buf) >= ROUNDS_PER_FILE:
-                with open(os.path.join(tmp, f"part{n_files:05d}.json"), "w") as f:
-                    json.dump(buf, f)
-                buf, n_files = [], n_files + 1
-    if buf:
-        with open(os.path.join(tmp, f"part{n_files:05d}.json"), "w") as f:
-            json.dump(buf, f)
-    os.rename(tmp, path)
-    return path, n_courses * n_rounds
-
-
-def generate_incremental_input(workdir: str) -> str:
-    """One course-day of NEW rounds (course0000, ingest 2024-02-02) —
-    the incremental-refresh unit. Same size at every corpus scale, so
-    phase 3 measures whether incremental cost tracks the NEW data or
-    the corpus."""
-    path = os.path.join(workdir, "bronze_inc")
-    if os.path.isdir(path):
-        return path
-    docs = []
-    for r in range(BASE_ROUNDS):
-        d = _round_doc(0, 1_000_000 + r)  # ids disjoint from every scale
-        docs.append(d)
-    tmp = path + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "part00000.json"), "w") as f:
-        json.dump(docs, f)
-    os.rename(tmp, path)
-    return path
+FACT = "silver.fact_telemetry_event"
 
 
 def main() -> int:
@@ -179,100 +52,45 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from tagmarshal_data_lakehouse_spark import silver
-    from tagmarshal_data_lakehouse_spark.gold.models import (
-        GoldBuilder,
-        incremental_update,
-    )
-    from tagmarshal_data_lakehouse_spark.session import get_spark
+    from tagmarshal_data_lakehouse_spark.gold.models import GoldBuilder, incremental_update
     from tagmarshal_data_lakehouse_spark.sources.bronze import read_rounds
     from tagmarshal_data_lakehouse_spark.storage import Lakehouse
+    from tools.amplify import bronze_corpus, check_landing, emit, files_per_leaf
+    from tools.amplify import print_calibration, probe_session, scaling_exponent
 
-    driver_mem = os.environ.get("SCALE_PROBE_DRIVER_MEM", "48g")
-    shuffle_parts = int(os.environ.get("SCALE_PROBE_SHUFFLE_PARTS", "32"))
-    spark = get_spark(
-        app_name="silver-gold-probe",
-        shuffle_partitions=shuffle_parts,
-        driver_memory=driver_mem,
-    )
+    spark = probe_session("silver-gold-probe")
+    # this path's cross-run envelope is disk-shaped (gold@256x has
+    # swung 23.7 -> 146.5 s on identical code)
+    print_calibration(spark, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
 
-    # IO preamble: this path's cross-run envelope is disk-shaped
-    # (gold@256x has swung 23.7 -> 146.5 s on identical code); a cold
-    # sequential-read rate off the same volume at probe start makes an
-    # IO-bound outlier attributable the way the bench fingerprint does.
-    import bench as _bench
-
-    print(
-        json.dumps(
-            {
-                "preamble": "calibration",
-                "disk_read_mbps": _bench._disk_read_mbps(
-                    os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-                ),
-                "loadavg_1m": round(os.getloadavg()[0], 2),
-            }
-        ),
-        flush=True,
-    )
+    def land(lake, path: str, ingest_date: str, run_id: str) -> tuple[int, int]:
+        raw, fmt = read_rounds(spark, path)
+        transformed = silver.transform_rounds(
+            raw, fmt, F.col("course"), F.lit(ingest_date), None
+        )
+        return silver.land_fixes(lake, transformed, FACT, f"quarantine.{run_id}")
 
     results: dict[str, dict[int, float]] = {"silver": {}, "gold": {}}
     for reps in reps_list:
-        src, n_rounds = generate_input(workdir, reps)
+        corpus = bronze_corpus(os.path.join(workdir, f"bronze_{reps}x"), reps)
+        (refresh,) = corpus.refreshes
         lake_root = os.path.join(workdir, f"lake_{reps}x")
         shutil.rmtree(lake_root, ignore_errors=True)
         lake = Lakehouse(spark, lake_root)
 
         # ---- phase 1: silver transform + partitioned write ----------
         t0 = time.perf_counter()
-        raw, fmt = read_rounds(spark, src)
-        transformed = silver.transform_rounds(
-            raw, fmt, F.col("course"), F.lit("2024-02-01"), None
-        )
-        valid, invalid = silver.split_coordinates(transformed)
-        valid = lake.align_to_schema(valid, silver.FACT_TELEMETRY_EVENT)
-        n_quarantined = invalid.count()
-        lake.replace_partitions(
-            "silver.fact_telemetry_event",
-            valid,
-            ["course_id", "ingest_date", "event_date"],
-        )
+        landed = land(lake, corpus.backfill_glob, corpus.backfill[0].ingest_date, "backfill")
         silver_sec = round(time.perf_counter() - t0, 3)
-        fact = lake.read("silver.fact_telemetry_event")
+        fact = lake.read(FACT)
         n_fact = fact.count()
         results["silver"][reps] = silver_sec
-        # Layout invariant readout (r11 clustered-write fix): every
-        # (course, ingest, event_date) leaf must hold exactly ONE data
-        # file at every corpus scale — the 63k-file cliff was files
-        # growing with upstream task count, and the invariant must hold
-        # as leaf count itself crosses 10^4 dirs.
-        import glob as _glob
-
-        leaf_files: dict[str, int] = {}
-        for fpath in _glob.glob(
-            os.path.join(lake.path("silver.fact_telemetry_event"), "**", "*.parquet"),
-            recursive=True,
-        ):
-            d = os.path.dirname(fpath)
-            leaf_files[d] = leaf_files.get(d, 0) + 1
-        max_files = max(leaf_files.values()) if leaf_files else 0
-        print(
-            json.dumps(
-                {
-                    "phase": "silver",
-                    "reps": reps,
-                    "rounds_in": n_rounds,
-                    "fact_rows": n_fact,
-                    "quarantined": n_quarantined,
-                    "leaf_dirs": len(leaf_files),
-                    "max_files_per_leaf": max_files,
-                    "layout_ok": max_files == 1,
-                    "sec": silver_sec,
-                }
-            ),
-            flush=True,
-        )
-        assert max_files == 1, (
-            f"clustered write broke at {reps}x: {max_files} files in one leaf"
-        )
+        # Layout invariant readout: one data file per leaf must hold as
+        # the leaf count itself crosses 10^4 dirs.
+        layout = files_per_leaf(lake.path(FACT))
+        emit(phase="silver", reps=reps, rounds_in=corpus.totals(corpus.backfill)["rounds"],
+             fact_rows=n_fact, quarantined=landed[1], **layout, sec=silver_sec)
+        check_landing(f"backfill at {reps}x", landed, corpus.backfill, layout)
 
         # ---- phase 2: full gold DAG over the written fact ------------
         t0 = time.perf_counter()
@@ -280,19 +98,9 @@ def main() -> int:
         model_rows = {name: df.count() for name, df in built.items()}
         gold_sec = round(time.perf_counter() - t0, 3)
         results["gold"][reps] = gold_sec
-        print(
-            json.dumps(
-                {
-                    "phase": "gold",
-                    "reps": reps,
-                    "n_models": len(model_rows),
-                    "fact_rounds_rows": model_rows.get("fact_rounds"),
-                    "coverage_audit_rows": model_rows.get("gold_coverage_audit"),
-                    "sec": gold_sec,
-                }
-            ),
-            flush=True,
-        )
+        emit(phase="gold", reps=reps, n_models=len(model_rows),
+             fact_rounds_rows=model_rows.get("fact_rounds"),
+             coverage_audit_rows=model_rows.get("gold_coverage_audit"), sec=gold_sec)
         spark.catalog.clearCache()  # drop the fact_rounds cache between scales
 
         # ---- phase 3: one-course-day incremental refresh --------------
@@ -304,61 +112,29 @@ def main() -> int:
         # scan, paid once per deployment) is timed separately so the
         # steady-state number is honest.
         t0 = time.perf_counter()
-        incremental_update(spark, lake, ["course0000"], None)
+        incremental_update(spark, lake, [refresh.course], None)
         seed_sec = round(time.perf_counter() - t0, 3)
-        print(
-            json.dumps({"phase": "rollup_seed", "reps": reps, "sec": seed_sec}),
-            flush=True,
-        )
+        emit(phase="rollup_seed", reps=reps, sec=seed_sec)
 
-        inc_src = generate_incremental_input(workdir)
         t0 = time.perf_counter()
-        raw, fmt = read_rounds(spark, inc_src)
-        transformed = silver.transform_rounds(
-            raw, fmt, F.col("course"), F.lit("2024-02-02"), None
-        )
-        valid, invalid = silver.split_coordinates(transformed)
-        valid = lake.align_to_schema(valid, silver.FACT_TELEMETRY_EVENT)
-        lake.replace_partitions(
-            "silver.fact_telemetry_event",
-            valid,
-            ["course_id", "ingest_date", "event_date"],
-        )
+        landed = land(lake, refresh.path, refresh.ingest_date, "refresh")
         timings: dict[str, float] = {}
-        written = incremental_update(spark, lake, ["course0000"], None, timings=timings)
+        written = incremental_update(spark, lake, [refresh.course], None, timings=timings)
         inc_sec = round(time.perf_counter() - t0, 3)
         results.setdefault("incremental", {})[reps] = inc_sec
         results.setdefault("incremental_global", {})[reps] = round(
             timings.get("rollup_refresh", 0.0) + timings.get("global_combine", 0.0), 3
         )
-        print(
-            json.dumps(
-                {
-                    "phase": "incremental",
-                    "reps": reps,
-                    "models_written": len(written),
-                    "fact_rounds_rows": written.get("fact_rounds"),
-                    "sec": inc_sec,
-                    "timings": timings,
-                }
-            ),
-            flush=True,
-        )
+        emit(phase="incremental", reps=reps, models_written=len(written),
+             fact_rounds_rows=written.get("fact_rounds"), sec=inc_sec, timings=timings)
+        layout = files_per_leaf(lake.path(FACT))
+        check_landing(f"refresh at {reps}x", landed, corpus.refreshes, layout)
         spark.catalog.clearCache()
 
     for phase, series in results.items():
         pts = sorted(series.items())
         if len(pts) >= 2:
-            (x0, t0_), (x1, t1_) = pts[0], pts[-1]
-            # clamp like scale_probe.py: a sub-millisecond phase
-            # rounding to 0.0 must not ZeroDivisionError the summary
-            p = math.log(max(t1_, 1e-3) / max(t0_, 1e-3)) / math.log(x1 / x0)
-            print(
-                json.dumps(
-                    {"phase": phase, "exponent": round(p, 2), "points": pts}
-                ),
-                flush=True,
-            )
+            emit(phase=phase, exponent=scaling_exponent(pts), points=pts)
     return 0
 
 
