@@ -9,6 +9,9 @@ Dialect conversions applied throughout (SURVEY §7.4 traps 1-2):
                                  -> collect_list / sort_array / array_distinct / size
 - AT TIME ZONE 'UTC'             -> no-op (session timezone is UTC)
 - CAST(x AS VARCHAR)             -> CAST(x AS STRING)
+- AVG(double metric)             -> exact_avg(...): decimal SUM / COUNT, so the
+                                    value does not depend on how the fact is
+                                    partitioned (full build == incremental)
 
 Source citations are per model.  Models read these temp views:
 `fact_telemetry_event`, `dim_facility_topology`, and each other by name.
@@ -19,6 +22,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..queries.telemetry import exact_avg
 
 ISO_DOW = "(((DAYOFWEEK({ts}) + 5) % 7) + 1)"
 
@@ -61,14 +66,14 @@ round_rollup AS (
         MAX(end_section) AS end_section,
         BOOL_OR(COALESCE(is_nine_hole, FALSE)) AS is_nine_hole,
         BOOL_OR(COALESCE(is_complete, FALSE)) AS is_complete,
-        AVG(pace) AS avg_pace_sec,
+        {exact_avg("pace")} AS avg_pace_sec,
         MAX(pace) AS max_pace_sec,
-        AVG(pace_gap) AS avg_pace_gap_sec,
-        AVG(positional_gap) AS avg_positional_gap,
+        {exact_avg("pace_gap")} AS avg_pace_gap_sec,
+        {exact_avg("positional_gap")} AS avg_positional_gap,
         SUM(CASE WHEN is_projected THEN 1 ELSE 0 END) AS projected_fix_count,
         SUM(CASE WHEN is_problem THEN 1 ELSE 0 END) AS problem_fix_count,
         MIN(battery_percentage) AS min_battery_pct,
-        AVG(battery_percentage) AS avg_battery_pct,
+        {exact_avg("battery_percentage")} AS avg_battery_pct,
         SUM(CASE WHEN battery_percentage < 20 THEN 1 ELSE 0 END) AS low_battery_fix_count,
         SUM(CASE WHEN battery_percentage < 10 THEN 1 ELSE 0 END) AS critical_battery_fix_count,
         SUM(CASE WHEN is_cache THEN 1 ELSE 0 END) AS cached_fix_count
@@ -412,16 +417,16 @@ FACT_ROUND_HOLE_PERFORMANCE = Model(
     doc="Per (round, hole, nine) performance with unit names — loop "
     "courses keep nine 1 vs 2 separate (reference "
     "fact_round_hole_performance.sql).",
-    sql="""
+    sql=f"""
 WITH hole_stats AS (
     SELECT course_id, round_id, hole_number, nine_number,
            MIN(fix_timestamp) AS hole_start_time,
            MAX(fix_timestamp) AS hole_end_time,
            TIMESTAMPDIFF(SECOND, DATE_TRUNC('SECOND', MIN(fix_timestamp)),
                       DATE_TRUNC('SECOND', MAX(fix_timestamp))) AS duration_sec,
-           AVG(pace) AS avg_pace_sec,
+           {exact_avg("pace")} AS avg_pace_sec,
            MAX(pace) AS max_pace_sec,
-           AVG(pace_gap) AS avg_pace_gap_sec,
+           {exact_avg("pace_gap")} AS avg_pace_gap_sec,
            BOOL_OR(is_complete) AS round_was_completed
     FROM fact_telemetry_event
     WHERE is_location_padding = FALSE AND hole_number IS NOT NULL
@@ -698,7 +703,7 @@ DIM_DEVICE = Model(
     name="dim_device",
     deps=("fact_telemetry_event",),
     doc="Device dimension (reference dim_device.sql).",
-    sql="""
+    sql=f"""
 SELECT device AS device_id,
        COUNT(*) AS total_rows,
        COUNT(DISTINCT course_id) AS courses_seen,
@@ -707,7 +712,7 @@ SELECT device AS device_id,
        SUM(CASE WHEN is_timestamp_missing THEN 1 ELSE 0 END) AS ts_missing_rows,
        MIN(battery_percentage) AS min_battery_pct,
        MAX(battery_percentage) AS max_battery_pct,
-       AVG(battery_percentage) AS avg_battery_pct
+       {exact_avg("battery_percentage")} AS avg_battery_pct
 FROM fact_telemetry_event
 WHERE device IS NOT NULL
 GROUP BY device
@@ -738,7 +743,7 @@ GLOBAL_OVERVIEW = Model(
     deps=("fact_telemetry_event",),
     doc="One-row global metrics (reference global_overview.sql; "
     "APPROX_PERCENTILE -> percentile_approx, FILTER clause kept).",
-    sql="""
+    sql=f"""
 WITH base AS (
     SELECT course_id, round_id, device AS device_id, fix_timestamp,
            is_timestamp_missing, is_location_padding, is_problem, is_complete,
@@ -763,7 +768,7 @@ agg AS (
         COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_auto_assigned, FALSE) THEN round_id END) AS auto_assigned_rounds,
         MIN(fix_timestamp) AS first_fix_ts,
         MAX(fix_timestamp) AS last_fix_ts,
-        AVG(pace_gap) FILTER (WHERE NOT is_location_padding) AS avg_pace_gap_sec,
+        {exact_avg("pace_gap", "NOT is_location_padding")} AS avg_pace_gap_sec,
         PERCENTILE_APPROX(pace_gap, 0.5) FILTER (WHERE NOT is_location_padding) AS median_pace_gap_sec
     FROM base
 )
@@ -791,7 +796,7 @@ GLOBAL_COURSE_SUMMARY = Model(
     name="global_course_summary",
     deps=("fact_telemetry_event",),
     doc="Per-course operational summary (reference global_course_summary.sql).",
-    sql="""
+    sql=f"""
 WITH base AS (
     SELECT course_id, round_id, device AS device_id, fix_timestamp,
            is_timestamp_missing, is_location_padding, is_problem, is_complete,
@@ -813,7 +818,7 @@ per_course AS (
         COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_nine_hole, FALSE) THEN round_id END) AS nine_hole_rounds,
         COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_secondary, FALSE) THEN round_id END) AS secondary_rounds,
         COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_auto_assigned, FALSE) THEN round_id END) AS auto_assigned_rounds,
-        AVG(pace_gap) FILTER (WHERE NOT is_location_padding) AS avg_pace_gap_sec,
+        {exact_avg("pace_gap", "NOT is_location_padding")} AS avg_pace_gap_sec,
         PERCENTILE_APPROX(pace_gap, 0.5) FILTER (WHERE NOT is_location_padding) AS median_pace_gap_sec
     FROM base GROUP BY course_id
 )
@@ -866,7 +871,7 @@ SELECT course_id, day_type, time_bucket, hour_of_day,
        COUNT(DISTINCT round_id) AS rounds,
        SUM(CASE WHEN is_problem THEN 1 ELSE 0 END) AS problem_rows,
        ROUND(100.0 * SUM(CASE WHEN is_problem THEN 1 ELSE 0 END) / NULLIF(COUNT(*), 0), 2) AS pct_problem_rows,
-       AVG(pace_gap) AS avg_pace_gap_sec,
+       {exact_avg("pace_gap")} AS avg_pace_gap_sec,
        PERCENTILE_APPROX(pace_gap, 0.5) AS median_pace_gap_sec
 FROM bucketed
 GROUP BY course_id, day_type, time_bucket, hour_of_day

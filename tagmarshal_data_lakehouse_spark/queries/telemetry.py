@@ -46,6 +46,14 @@ def _esc(value: str) -> str:
     return value.replace("'", "''")
 
 
+def exact_avg(col: str, where: str | None = None) -> str:
+    """Decimal-exact AVG(col): SUM over DECIMAL(28,10) divided by
+    COUNT(col), as double (see _exact_avg_std for why).  `where` puts
+    the same FILTER clause on both aggregates."""
+    f = f" FILTER (WHERE {where})" if where else ""
+    return f"(CAST(SUM(CAST({col} AS DECIMAL(28,10))){f} AS DOUBLE) / COUNT({col}){f})"
+
+
 def _exact_avg_std(sql: str) -> str:
     """Rewrite AVG(col)/STDDEV(col) over simple column references to
     decimal-exact forms (the engine-wide determinism contract of
@@ -83,10 +91,7 @@ def _exact_avg_std(sql: str) -> str:
     import re
 
     def avg_repl(m: "re.Match[str]") -> str:
-        c = m.group(1)
-        return (
-            f"(CAST(SUM(CAST({c} AS DECIMAL(28,10))) AS DOUBLE) / COUNT({c}))"
-        )
+        return exact_avg(m.group(1))
 
     def std_repl(m: "re.Match[str]") -> str:
         c = m.group(1)

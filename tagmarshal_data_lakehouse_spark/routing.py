@@ -3,11 +3,13 @@
 Two kinds of decision live here, each made from statistics the engine
 already has:
 
-- **Arrow kernel or SQL expression.** The training operators keep
-  expression/Arrow twins. The router picks one from Catalyst's row
-  estimate (zero Spark jobs) or, for the near-dup pair scorers, from the
+- **Arrow kernel or SQL expression.** One predicate per twin that a
+  4-core A/B measured faster than its expression on some corpus
+  (SCALE.md, "4-core twin A/B"): `gemm_for_assignment` for the
+  k-means/PQ argmin, from Catalyst's row estimate (zero Spark jobs), and
+  `gemm_for_pair_scoring` for the near-dup pair scorers, from the
   candidate-pair density their own statistics pass measured. Both
-  branches of every twin give identical results (pinned by the parity
+  branches of each twin give identical results (pinned by the parity
   tests), so a decision changes the plan, never the answer. Unknown
   statistics route to the expression, whose fixed cost is zero: a
   10-row createDataFrame corpus must never pay the Arrow boundary.
@@ -17,7 +19,8 @@ already has:
   both, so sizing one kind never reads another kind's width as its
   default.
 
-Every constant was measured at local[32] (SCALE.md, rounds 6-14).
+Every constant was measured at local[32] (SCALE.md, rounds 6-14) and
+has not been re-calibrated for 4 cores.
 """
 
 from __future__ import annotations
@@ -33,12 +36,15 @@ from pyspark.sql import DataFrame
 # right order of magnitude: both branches produce identical results, so
 # an estimate near the crossover can only shift the plan, never the
 # result (and at the crossover the two plans cost the same by
-# definition).
+# definition).  A corpus that compresses far better misreads: the 10x
+# amplified corpus (tools/amplify.py) stores ~57 B/row because 63 of
+# its 64 dims repeat across replicas, so its estimate is ~7x low.
 _EST_BYTES_PER_ROW = 400
 
 # Catalyst's "statistics unavailable" sentinel: non-file-backed plans
-# (LogicalRDD / createDataFrame / mapInPandas output) report
-# sizeInBytes = Long.MaxValue, which is "unknown", not "huge".
+# (LogicalRDD / createDataFrame, and a mapInPandas over one) report
+# sizeInBytes = Long.MaxValue, which is "unknown", not "huge".  A
+# mapInPandas over a file scan carries the scan's estimate.
 _STATS_UNKNOWN_SIZE = (1 << 63) - 1
 
 
@@ -72,8 +78,8 @@ def estimated_rows(df: DataFrame) -> "int | None":
 # Arrow kernel or SQL expression
 # ---------------------------------------------------------------------------
 
-# Argmin assignment (k-means, PQ encode) and minhash signatures: route
-# through the Arrow/numpy kernel instead of the interpreted HOF folds
+# Argmin assignment (k-means, PQ encode): route through the Arrow/numpy
+# GEMM kernel instead of the interpreted HOF folds
 # (r14 optimization pass, guide §4.2).  Two conditions, both required:
 #
 # - work per row (e.g. k*dim interpreted lambda steps) must be worth a
@@ -90,13 +96,6 @@ def estimated_rows(df: DataFrame) -> "int | None":
 _GEMM_ASSIGN_MIN_FOLD = 256
 _GEMM_ASSIGN_MIN_TOTAL_STEPS = 2_000_000
 
-# Hyperplane buckets (the LSH top-k paths): below ~8k rows the
-# mapInPandas fixed costs (Arrow stage + worker roundtrip + the
-# full-scan dim probe) exceed the fold savings: bench sf0.1 (2k
-# vectors) read 0.69 s expression vs 1.02 s GEMM on the top-k path,
-# while the 32k-row probe point already favored GEMM.
-_GEMM_BUCKET_MIN_ROWS = 8192
-
 # Near-dup pair scoring (banded LSH and semantic dedup): candidate pairs
 # per vector at which the within-bucket GEMM beats the expression pair
 # join.  The round-6 probe (SCALE.md; 8 bands x 10 planes, max_bucket
@@ -107,22 +106,14 @@ _GEMM_PAIR_MIN_DENSITY = 50.0
 
 
 def gemm_for_assignment(df: DataFrame, work_per_row: int) -> bool:
-    """True when the Arrow/numpy argmin or signature kernel pays for its
-    boundary on `df`: `work_per_row` interpreted steps per row of at
-    least _GEMM_ASSIGN_MIN_FOLD, and an estimated total of at least
+    """True when the Arrow/numpy argmin kernel pays for its boundary on
+    `df`: `work_per_row` interpreted steps per row of at least
+    _GEMM_ASSIGN_MIN_FOLD, and an estimated total of at least
     _GEMM_ASSIGN_MIN_TOTAL_STEPS."""
     if work_per_row < _GEMM_ASSIGN_MIN_FOLD:
         return False
     est = estimated_rows(df)
     return est is not None and est * work_per_row >= _GEMM_ASSIGN_MIN_TOTAL_STEPS
-
-
-def gemm_for_buckets(df: DataFrame) -> bool:
-    """True when Catalyst estimates `df` at _GEMM_BUCKET_MIN_ROWS rows
-    or more, so the hyperplane buckets project through one GEMM per
-    Arrow batch instead of per-row folds."""
-    est = estimated_rows(df)
-    return est is not None and est >= _GEMM_BUCKET_MIN_ROWS
 
 
 def gemm_for_pair_scoring(density: float) -> bool:

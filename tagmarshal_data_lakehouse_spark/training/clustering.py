@@ -212,8 +212,8 @@ def assign_clusters(
     first match), keeping assignment deterministic.
 
     Two parity-pinned execution paths (r14 optimization pass, guide
-    §4.2 — the `_with_hyperplane_bucket` pattern applied to the k-means
-    family, VERDICT r13's top remaining cost):
+    §4.2 — the `similarity._banded_exploded` GEMM pattern applied to the
+    k-means family, VERDICT r13's top remaining cost):
 
     - **expression** (small k*dim): k codegen'd distance folds + argmin
       via array_position — identical to the historical form.
@@ -451,6 +451,10 @@ def kmeans(
         # one routing decision for the whole fit (r14): the loop's
         # frames are the same corpus, and per-iteration stat reads buy
         # nothing; the final assignment below reuses the same branch.
+        # Routed from `df`, not `fit_frame`: Catalyst estimates the
+        # persisted frame no closer, before or after it is filled
+        # (sf0.1: 1,996 rows from df vs 1,663, true 2,000; the 10x
+        # corpus: 2,831 vs 2,359, true 20,000).
         use_gemm = routing.gemm_for_assignment(df, k * dim)
         centroids = init_centroids(fit_frame, k, id_col, vec_col)
 

@@ -14,8 +14,6 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -227,78 +225,6 @@ def incremental_dedup(
     )
 
 
-def _numpy_minhash_udf(seeds: tuple):
-    """Arrow-batched minhash signature kernel, bit-identical to the
-    `transform(seeds, sd -> array_min(transform(gram_hashes, h ->
-    xxhash64(h, sd))))` expression (see the routing note at the call
-    site).  Closure-local so cloudpickle ships it by value (the simhash
-    kernel's worker-importability contract).
-
-    Exactness: Spark's two-argument xxhash64 chains the single-long
-    XXH64 — xxhash64(h, sd) = hashLong(sd, hashLong(h, 42)) — and
-    hashLong is ~10 uint64 multiply/rotate/xor ops, reproduced here
-    verbatim (parity-pinned against Spark on random and boundary
-    longs).  Because the permutation seed sits in the VALUE slot of the
-    outer hashLong, its first mixing stage is a per-permutation
-    CONSTANT, so each permutation costs one broadcast xor + avalanche
-    over the per-gram inner hashes computed once."""
-    num_perm = len(seeds)
-    P1 = 0x9E3779B185EBCA87
-    P2 = 0xC2B2AE3D27D4EB4F
-    P3 = 0x165667B19E3779F9
-    P4 = 0x85EBCA77C2B2AE63
-    P5 = 0x27D4EB2F165667C5
-
-    @F.pandas_udf("array<bigint>")
-    def numpy_minhash(gram_hashes: pd.Series) -> pd.Series:
-        u = np.uint64
-        p1, p2, p3, p4, p5 = u(P1), u(P2), u(P3), u(P4), u(P5)
-
-        def rotl(x, r):
-            return (x << u(r)) | (x >> u(64 - r))
-
-        def fmix_tail(h):
-            h = h ^ (h >> u(33))
-            h = h * p2
-            h = h ^ (h >> u(29))
-            h = h * p3
-            h = h ^ (h >> u(32))
-            return h
-
-        vals = gram_hashes.to_numpy()
-        nulls = [None] * num_perm
-        res: list = [nulls] * len(vals)
-        ne = [i for i, a in enumerate(vals) if a is not None and len(a) > 0]
-        if not ne:
-            return pd.Series(res)
-        with np.errstate(over="ignore"):
-            flat = np.concatenate(
-                [np.asarray(vals[i], dtype=np.int64) for i in ne]
-            ).view(np.uint64)
-            lens = np.fromiter((len(vals[i]) for i in ne), dtype=np.int64, count=len(ne))
-            starts = np.zeros(len(ne), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            # inner = hashLong(gram_hash, 42), once per gram
-            k1 = rotl(flat * p2, 31) * p1
-            inner = (u(42) + p5 + u(8)) ^ k1
-            inner = rotl(inner, 27) * p1 + p4
-            inner = fmix_tail(inner)
-            out = np.empty((len(ne), num_perm), dtype=np.int64)
-            for j, sd in enumerate(seeds):
-                # outer = hashLong(sd, inner): sd's mixing stage is constant
-                k1c = rotl(u(sd & 0xFFFFFFFFFFFFFFFF) * p2, 31) * p1
-                h = (inner + p5 + u(8)) ^ k1c
-                h = rotl(h, 27) * p1 + p4
-                h = fmix_tail(h)
-                out[:, j] = np.minimum.reduceat(h.view(np.int64), starts)
-        for pos, i in enumerate(ne):
-            res[i] = out[pos]
-        return pd.Series(res)
-
-    # §4.4 fence — see clustering._gemm_argmin_udf
-    return numpy_minhash.asNondeterministic()
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -338,25 +264,6 @@ def minhash_signatures(
     hashed = shingled.selectExpr(
         "*", "transform(shingles, s -> xxhash64(s)) AS gram_hashes"
     )
-    if routing.gemm_for_assignment(hashed, num_perm * 64):
-        # Arrow/numpy signature twin (r14, guide §4.2 — the same
-        # interpreted-HOF-to-vectorized move as the k-means GEMM
-        # assignment): the num_perm x G rehash+min is the dedup
-        # family's largest per-row interpreted cost.  The kernel
-        # reproduces Spark's two-argument xxhash64 EXACTLY —
-        # xxhash64(h, sd) = XXH64.hashLong(sd, XXH64.hashLong(h, 42)) —
-        # so the per-gram inner hash runs once and each permutation is
-        # ~10 vectorized uint64 ops + one segment-min (parity pinned in
-        # tests/test_training_dedup.py on random longs and adversarial
-        # rows).  Signed array_min == signed np.minimum over the same
-        # int64 values; NULL/empty gram sets yield [NULL]*num_perm on
-        # both paths.  Routed from Catalyst stats like the GEMM twin
-        # (unknown/small corpora keep the expression form).
-        sig_udf = _numpy_minhash_udf(tuple(_MINHASH_SEEDS[:num_perm]))
-        cols = [F.col(id_col)] + (
-            [F.col("gram_hashes")] if keep_gram_hashes else []
-        ) + [sig_udf(F.col("gram_hashes")).alias("sig")]
-        return hashed.select(*cols)
     seeds_sql = ", ".join(f"{s}L" for s in _MINHASH_SEEDS[:num_perm])
     sig_sql = (
         f"transform(array({seeds_sql}), "

@@ -21,6 +21,15 @@ Paired correctness-baseline / scale-path implementations throughout:
 - `ivf_topk`: IVF-Flat ANN — KMeans coarse quantizer, map-side cell
   assignment against broadcast centroids, queries probe `n_probe`
   nearest cells only.
+
+Hyperplane sketches come in two forms.  A single-band bucket (the top-k
+and hard-negative LSH paths, the streaming semantic dedup) is always
+the `_bucket_col` projection.  The banded near-dup sketch is one numpy
+GEMM per Arrow batch (`_banded_exploded`), with the expression
+`_hyperplane_band_structs` as its test reference.  The one speed twin
+in this module is the near-dup pair scorer (expression join or
+within-bucket GEMM, `routing.gemm_for_pair_scoring`); SCALE.md ("4-core
+twin A/B") has the measurements that keep it.
 """
 
 from __future__ import annotations
@@ -1150,11 +1159,12 @@ def _bucket_col(vec_col: str, n_planes: int) -> F.Column:
     projection is a sequential left-fold (`aggregate`), so the float sum
     order is fixed and the bucket is deterministic.
 
-    Two live roles since the GEMM banding landed: the STREAMING semantic
-    dedup keeps this expression form (a plain projection composes into
-    a streaming plan with no Python barrier), and the batch ANN paths
-    use it as the parity-test twin for `_with_hyperplane_bucket` — the
-    same split as _hyperplane_band_structs vs _banded_exploded."""
+    The only single-band bucket: the batch ANN paths
+    (`hyperplane_buckets`, `cosine_topk_lsh`, `hard_negatives_lsh`) and
+    the STREAMING semantic dedup all project it, so it composes into any
+    plan with no Python barrier and keeps filter pushdown intact.  A
+    mapInPandas GEMM form measured no faster at 4 cores on any corpus
+    (SCALE.md, "4-core twin A/B")."""
     # One nested higher-order expression instead of n_planes spelled-out
     # fold terms (r13 optimization pass, guide §4 per-task work): the old
     # form repeated each plane's O(dim) fold TWICE (once under isnan,
@@ -1165,8 +1175,8 @@ def _bucket_col(vec_col: str, n_planes: int) -> F.Column:
     # exactly once into an in-plan array, then the sign bits fold over
     # that array.  Values are bit-identical: same xxhash64(i, j) plane
     # formula over the same INT types, same fold order, same NaN/NULL
-    # handling per element (NaN projections set bit 0, matching the GEMM
-    # twin's IEEE comparison — see _hyperplane_band_structs).
+    # handling per element (NaN projections set bit 0, matching the
+    # banded GEMM's IEEE comparison — see _hyperplane_band_structs).
     projs = (
         f"transform(sequence(0, {n_planes - 1}), j -> "
         f"aggregate(zip_with({vec_col}, sequence(0, size({vec_col}) - 1), "
@@ -1182,88 +1192,14 @@ def _bucket_col(vec_col: str, n_planes: int) -> F.Column:
     # guide §4.4 pathology with a built-in expression): the expression
     # cannot actually return NULL — the outer fold runs over a literal
     # sequence with a non-null init and CASE...ELSE 0 elements, so a
-    # NULL/empty vector yields bucket 0 (the GEMM twin's contract,
-    # parity-pinned) — but Catalyst types it nullable, and every
-    # inner equi-join on `bucket` then infers an IsNotNull(bucket)
-    # filter that is pushed BELOW the projection, re-inlining and
+    # NULL/empty vector yields bucket 0 (pinned in the tests) — but
+    # Catalyst types it nullable, and every inner equi-join on
+    # `bucket` then infers an IsNotNull(bucket) filter that is pushed
+    # BELOW the projection, re-inlining and
     # re-evaluating the whole O(planes*dim) fold once more per row.
     # With the key provably non-nullable the inference never fires and
     # each row pays the fold exactly once.
     return F.coalesce(F.expr(bucket).cast("int"), F.lit(0))
-
-
-@lru_cache(maxsize=64)
-def _single_band_plane_matrix(dim: int, n_planes: int) -> "np.ndarray":
-    """(dim × n_planes) float64 — the single-band analogue of
-    `_plane_matrix`: element (i, j) = cast(xxhash64(i, j) % 10007 as
-    double) / 1.0007e4, evaluated by Spark's own xxhash64 so the GEMM
-    bucket agrees bit-for-bit with the `_bucket_col` expression twin."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    rows = (
-        spark.range(dim * n_planes)
-        .selectExpr(
-            f"CAST(id DIV {n_planes} AS INT) AS i",
-            f"CAST(id % {n_planes} AS INT) AS j",
-        )
-        .selectExpr("i", "j", "cast(xxhash64(i, j) % 10007 as double) / 1.0007e4 AS w")
-        .collect()
-    )
-    planes = np.zeros((dim, n_planes))
-    for row in rows:
-        planes[row["i"], row["j"]] = row["w"]
-    return planes
-
-
-def _with_hyperplane_bucket(
-    embeddings: DataFrame,
-    n_planes: int,
-    vec_col: str,
-    keep_cols: list,
-    use_gemm: "bool | None" = None,
-) -> DataFrame:
-    """keep_cols + packed sign-bit `bucket` (include `vec_col` in
-    keep_cols to carry the vectors through), projections as one
-    numpy GEMM per Arrow batch — the batch ANN counterpart of
-    `_banded_exploded` (same measured rationale: per-row
-    aggregate/zip_with folds are lambda interpretation, ~an order of
-    magnitude over the matmul).  Plane values come from the exact
-    `_bucket_col` xxhash64 formula (`_single_band_plane_matrix`),
-    pytest-pinned bucket-identical to the expression twin.
-
-    `use_gemm` overrides the stats routing — callers that bucketize
-    BOTH sides of a join (cosine_topk_lsh) must decide once on the
-    corpus and force the same branch on each side, so a sign decision
-    within float-summation-order distance of zero (the one place the
-    GEMM and the fold may disagree, per `_banded_exploded`) can never
-    desynchronize the join keys."""
-    out_cols = list(keep_cols)
-    in_cols = out_cols if vec_col in out_cols else out_cols + [vec_col]
-    fields = {f.name: f.dataType.simpleString() for f in embeddings.schema.fields}
-    if use_gemm is None:
-        use_gemm = routing.gemm_for_buckets(embeddings)
-    if not use_gemm:
-        # Buckets are identical either way (parity-pinned), so the
-        # routing changes the plan only (two-sided callers force one
-        # decision via use_gemm instead of routing per side).
-        return embeddings.select(
-            *out_cols, _bucket_col(vec_col, n_planes).alias("bucket")
-        )
-    planes = _single_band_plane_matrix(_probe_max_dim(embeddings, vec_col), n_planes)
-    schema = ", ".join([f"{c} {fields[c]}" for c in out_cols] + ["bucket int"])
-
-    def bucketize(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = pdf[out_cols].copy()
-            # one group of n_planes sign bits — the single-band case of
-            # the shared packer (NULL/ragged/empty rows per the twin)
-            out["bucket"] = _gemm_buckets(pdf[vec_col], planes, 1, n_planes).reshape(-1)
-            yield out
-
-    return embeddings.select(*in_cols).mapInPandas(bucketize, schema)
 
 
 def hyperplane_buckets(
@@ -1274,11 +1210,11 @@ def hyperplane_buckets(
 ) -> DataFrame:
     """Random-hyperplane sign sketch (Charikar 2002 SimHash for angles).
 
-    Bucket = packed sign bits, computed map-side in the scan's Arrow
-    batches (no shuffle).  At 100 TB: one narrow scan, shuffle only on
-    (bucket), skew bounded by 2^n_planes buckets.
+    Bucket = packed sign bits, projected row-locally in the scan
+    (`_bucket_col`, no shuffle).  At 100 TB: one narrow scan, shuffle
+    only on (bucket), skew bounded by 2^n_planes buckets.
     """
-    return _with_hyperplane_bucket(embeddings, n_planes, vec_col, [id_col])
+    return embeddings.select(id_col, _bucket_col(vec_col, n_planes).alias("bucket"))
 
 
 def cosine_topk_lsh(
@@ -1298,41 +1234,20 @@ def cosine_topk_lsh(
     _guard_query_bound(n_queries, MAX_BROADCAST_QUERIES, "cosine_topk_lsh")
     # bucket is computed map-side in the scan (no join-back shuffle);
     # the tiny query side is broadcast so candidates never shuffle at
-    # all.  The query side is bucketized SEPARATELY on the pre-filtered
-    # frame: a filter cannot push through the mapInPandas barrier, so
-    # filtering the bucketized corpus would GEMM the whole corpus twice
-    # — the bucket is row-local and deterministic, so bucketizing the
-    # n_queries rows alone yields the identical join keys.  The
-    # expr-vs-GEMM decision is made ONCE, on the corpus stats, and
-    # forced on BOTH sides: letting each side route itself would let a
-    # near-zero sign decision differ between the fold and the matmul
-    # and silently drop that query's bucket-mates (default-mode
-    # Catalyst does not discount Filter selectivity, so the filtered
-    # query side would always misread its stats as corpus-sized
-    # anyway).  The query-side GEMM runs over MAX_BROADCAST_QUERIES
-    # rows at most — one small Arrow batch.
-    use_gemm = routing.gemm_for_buckets(embeddings)
-    queries = _with_hyperplane_bucket(
-        embeddings.filter(F.col(id_col) < n_queries),
-        n_planes,
-        vec_col,
-        [id_col, vec_col],
-        use_gemm=use_gemm,
-    ).select(
+    # all.
+    queries = embeddings.filter(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
-        "bucket",
+        _bucket_col(vec_col, n_planes).alias("bucket"),
         F.expr(_DOT.format(a=vec_col, b=vec_col)).alias("qn2"),
     )
     # Per-side norms once per row before the bucket join (r13, guide
     # §1.2): per pair, each O(dim) self-dot fold ran per bucket-mate
     # pair.  Same fold over the same array — bit-identical cosine.
-    cands = _with_hyperplane_bucket(
-        embeddings, n_planes, vec_col, [id_col, vec_col], use_gemm=use_gemm
-    ).select(
+    cands = embeddings.select(
         F.col(id_col).alias("candidate_id"),
         F.col(vec_col).alias("cvec"),
-        "bucket",
+        _bucket_col(vec_col, n_planes).alias("bucket"),
         F.expr(_DOT.format(a=vec_col, b=vec_col)).alias("cn2"),
     )
     dot = F.expr(_DOT.format(a="qvec", b="cvec"))
@@ -1810,11 +1725,10 @@ def hard_negatives_lsh(
     result ⊆ exact-scored different-label pairs with identical cosines.
     """
     _guard_query_bound(n_queries, MAX_BROADCAST_QUERIES, "hard_negatives_lsh")
-    # expression bucket on purpose: at this path's 4 planes the folds
-    # are cheaper than a mapInPandas Arrow roundtrip of the vectors
-    # (probed 16x/64x: 0.93/2.10 s expr vs 1.56/2.59 s GEMM), and the
-    # projection keeps the query-side filter pushdown intact — the
-    # GEMM form (_with_hyperplane_bucket) wins from ~8 planes up
+    # expression bucket: at this path's 4 planes the folds are cheaper
+    # than a mapInPandas Arrow roundtrip of the vectors (probed 16x/64x:
+    # 0.93/2.10 s expr vs 1.56/2.59 s GEMM), and the projection keeps
+    # the query-side filter pushdown intact
     vecs = embeddings.select(
         F.col(id_col),
         F.col(vec_col),

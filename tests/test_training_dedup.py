@@ -769,28 +769,10 @@ def test_simhash_vectorized_kernel_matches_reference(spark):
         assert got[i] == ref_simhash(t), (i, t[:40], got[i], ref_simhash(t))
 
 
-def test_minhash_numpy_twin_parity(spark, sf_smoke, monkeypatch):
-    """r14: the Arrow/numpy minhash signature kernel must be
-    bit-identical to the transform/array_min expression — including the
-    two-argument xxhash64 chaining (hashLong(sd, hashLong(h, 42))) and
-    the NULL/empty-gram [NULL]*num_perm shape — pinned by forcing both
-    routing branches over real and adversarial corpora."""
-    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
-    monkeypatch.setattr(routing, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 10**18)  # expression
-    a = dedup.minhash_signatures(docs, keep_gram_hashes=True).collect()
-    monkeypatch.setattr(routing, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 0)  # numpy twin
-    b = dedup.minhash_signatures(docs, keep_gram_hashes=True).collect()
-    da = {r["doc_id"]: (list(r["sig"]), list(r["gram_hashes"])) for r in a}
-    db = {r["doc_id"]: (list(r["sig"]), list(r["gram_hashes"])) for r in b}
-    assert da == db
-
+def test_minhash_signature_edge_rows(spark):
+    """NULL and empty texts still get a num_perm-slot signature, as do
+    one-token and long repetitive texts."""
     rows = [(1, None), (2, ""), (3, "one"), (4, "a b c d e f g"), (5, "x " * 500)]
     edf = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setattr(routing, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 10**18)
-    ea = dedup.minhash_signatures(edf).collect()
-    monkeypatch.setattr(routing, "_GEMM_ASSIGN_MIN_TOTAL_STEPS", 0)
-    eb = dedup.minhash_signatures(edf).collect()
-    ca = {r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None) for r in ea}
-    cb = {r["doc_id"]: (list(r["sig"]) if r["sig"] is not None else None) for r in eb}
-    assert ca == cb
-    assert all(v is not None and len(v) == 32 for v in ca.values())
+    sigs = {r["doc_id"]: r["sig"] for r in dedup.minhash_signatures(edf).collect()}
+    assert all(v is not None and len(v) == 32 for v in sigs.values())

@@ -144,73 +144,22 @@ def test_gemm_banding_matches_expression_twin(planted):
     assert len(got) == planted.count() * n_bands
 
 
-def test_gemm_bucket_matches_expression_twin(planted):
-    """The batch ANN bucket (_with_hyperplane_bucket, GEMM) must agree
-    with the _bucket_col expression twin the streaming path still uses
-    — same xxhash64 plane formula, so any divergence is a sign flip at
-    summation-order distance from zero (or a packing bug)."""
-    n_planes = 7
-    got = {
-        r["vec_id"]: r["bucket"]
-        for r in similarity._with_hyperplane_bucket(
-            planted, n_planes, "embedding", ["vec_id"], use_gemm=True
-        ).collect()
-    }
-    want = {
-        r["vec_id"]: r["bucket"]
-        for r in planted.select(
-            "vec_id", similarity._bucket_col("embedding", n_planes).alias("bucket")
-        ).collect()
-    }
-    assert got == want
-    assert len(got) == planted.count()
-
-
-def test_single_band_bucket_routes_by_corpus_size(planted, tmp_path, monkeypatch):
-    """Below the measured crossover (~8k rows) the single-band bucket
-    must stay a plain projection (no Python barrier, filter pushdown
-    intact); only a corpus Catalyst POSITIVELY estimates above the
-    crossover takes the GEMM mapInPandas form.  Sources whose size
-    Catalyst cannot estimate (createDataFrame → ExistingRDD, the
-    Long.MaxValue sizeInBytes sentinel) are UNKNOWN, not huge — they
-    default to the cheap expression branch so a 10-row local frame
-    never pays the Arrow fixed costs (round-7 ADVICE).  Both branches
-    produce identical buckets (parity tests above): this pins the PLAN."""
+def test_cosine_topk_lsh_plan_has_no_python_barrier(planted, tmp_path):
+    """Every single-band bucket is the `_bucket_col` projection, so the
+    LSH top-k plan has no Python barrier on either join side, whether
+    Catalyst knows the corpus size (parquet) or not (createDataFrame),
+    and both give the same rows."""
     path = str(tmp_path / "planted_parquet")
     planted.write.parquet(path)
-    spark = planted.sparkSession
-    filed = spark.read.parquet(path)
-    small = similarity._with_hyperplane_bucket(filed, 6, "embedding", ["vec_id"])
-    # createDataFrame has no stats (sizeInBytes == Long.MaxValue) →
-    # unknown → expression branch
-    unknown = similarity._with_hyperplane_bucket(planted, 6, "embedding", ["vec_id"])
-    forced = similarity._with_hyperplane_bucket(
-        filed, 6, "embedding", ["vec_id"], use_gemm=True
-    )
-    assert "MapInPandas" not in physical_plan(small)
-    assert "MapInPandas" not in physical_plan(unknown)
-    assert "MapInPandas" in physical_plan(forced)
-    assert {tuple(r) for r in small.collect()} == {tuple(r) for r in forced.collect()}
-    assert not routing.gemm_for_buckets(planted)  # unknown stats → expression
-    assert not routing.gemm_for_buckets(filed)
-    # mapInPandas output also reports the sentinel → expression
-    mapped = similarity._banded_exploded(filed, 2, 3, "vec_id", "embedding")
-    assert not routing.gemm_for_buckets(mapped)
-    # cosine_topk_lsh decides ONCE on the corpus and forces the same
-    # branch on BOTH join sides — a near-zero sign decision may differ
-    # between the fold and the matmul, so mixed-implementation sides
-    # could desynchronize join keys. Small corpus: zero Python barriers
-    # anywhere; a corpus the stats read as LARGE (pinned by stubbing the
-    # routing — a real >8k-row file fixture would dominate suite time):
-    # a barrier on each side (query + candidate), never one.
-    plan_small = physical_plan(similarity.cosine_topk_lsh(filed, n_queries=5, k=2))
-    assert plan_small.count("MapInPandas") == 0
-    small_rows = {tuple(r) for r in similarity.cosine_topk_lsh(filed, n_queries=5, k=2).collect()}
-    monkeypatch.setattr(routing, "gemm_for_buckets", lambda df: True)
-    plan_large = physical_plan(similarity.cosine_topk_lsh(planted, n_queries=5, k=2))
-    assert plan_large.count("MapInPandas") == 2
-    large_rows = {tuple(r) for r in similarity.cosine_topk_lsh(planted, n_queries=5, k=2).collect()}
-    assert small_rows == large_rows
+    filed = planted.sparkSession.read.parquet(path)
+    for corpus in (filed, planted):
+        plan = physical_plan(similarity.cosine_topk_lsh(corpus, n_queries=5, k=2))
+        assert "MapInPandas" not in plan
+    filed_rows = {tuple(r) for r in similarity.cosine_topk_lsh(filed, n_queries=5, k=2).collect()}
+    planted_rows = {
+        tuple(r) for r in similarity.cosine_topk_lsh(planted, n_queries=5, k=2).collect()
+    }
+    assert filed_rows == planted_rows
 
 
 def test_banded_exploded_empty_corpus(planted):
@@ -275,21 +224,21 @@ def test_gemm_banding_degenerate_rows_match_expression_twin(degenerate):
     assert all(got[(5, b)] == 0 for b in range(n_bands))  # NaN -> isnan guard
 
 
-def test_gemm_bucket_degenerate_rows_match_expression_twin(degenerate):
+def test_bucket_col_degenerate_rows(degenerate):
+    """NULL and empty vectors get bucket 0, a NaN projection leaves its
+    bit unset, and every bucket fits in n_planes bits."""
     n_planes = 5
     got = {
-        r["vec_id"]: r["bucket"]
-        for r in similarity._with_hyperplane_bucket(
-            degenerate, n_planes, "embedding", ["vec_id"], use_gemm=True
-        ).collect()
-    }
-    want = {
         r["vec_id"]: r["bucket"]
         for r in degenerate.select(
             "vec_id", similarity._bucket_col("embedding", n_planes).alias("bucket")
         ).collect()
     }
-    assert got == want
+    assert len(got) == degenerate.count()
+    assert got[0] == 0  # NULL -> ELSE branch
+    assert got[1] == 0  # empty -> NULL fold
+    assert got[5] == 0  # NaN in every projection -> isnan guard
+    assert all(0 <= b < 2**n_planes for b in got.values())
 
 
 def test_cosine_topk_wrapper_routes_to_lsh_by_default(planted):
