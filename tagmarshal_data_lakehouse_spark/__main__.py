@@ -109,7 +109,7 @@ def cmd_seed_profile(args) -> int:
 
 
 def cmd_gold(args) -> int:
-    from .gold.models import GoldBuilder, incremental_update
+    from .gold.models import incremental_update
 
     spark, lake = _spark_and_lake(args)
     topo = (
@@ -117,21 +117,11 @@ def cmd_gold(args) -> int:
         if lake.exists("silver.dim_facility_topology")
         else None
     )
-    if getattr(args, "courses", None):
-        # partition-scoped refresh: only the named courses are re-aggregated
-        written = incremental_update(spark, lake, args.courses, topo)
-        for name, n in written.items():
-            print(f"gold.{name}: {n} rows refreshed")
-        return 0
-    fact = lake.read("silver.fact_telemetry_event")
-    models = GoldBuilder(spark).build(fact, topo)
-    for name, df in models.items():
-        # course_id partitioning (the reference's Iceberg gold property)
-        # is what makes the incremental --courses path able to replace
-        # exactly the affected course partitions later
-        part = ["course_id"] if "course_id" in df.columns else None
-        lake.overwrite(f"gold.{name}", df, partition_by=part)
-        print(f"gold.{name}: {lake.read(f'gold.{name}').count()} rows")
+    # --courses rewrites only the named courses' partitions; without it
+    # every model is rebuilt and the global models' rollups re-seeded
+    written = incremental_update(spark, lake, args.courses or None, topo)
+    for name, n in written.items():
+        print(f"gold.{name}: {n} rows")
     return 0
 
 

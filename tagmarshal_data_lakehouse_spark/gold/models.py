@@ -15,6 +15,9 @@ Dialect conversions applied throughout (SURVEY §7.4 traps 1-2):
 
 Source citations are per model.  Models read these temp views:
 `fact_telemetry_event`, `dim_facility_topology`, and each other by name.
+The two corpus-global models (global_overview, dim_device) are their
+`combine` over the per-course partials of gold/rollups.py, inlined as
+CTEs; global_overview's median is the exact nearest-rank value.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..queries.telemetry import exact_avg
+from .rollups import refresh_rollups, with_partials
 
 ISO_DOW = "(((DAYOFWEEK({ts}) + 5) % 7) + 1)"
 
@@ -34,6 +38,19 @@ class Model:
     sql: str
     deps: tuple[str, ...] = ()
     doc: str = ""
+    # Corpus-global models only: the SELECT over the rollup partials
+    # (gold/rollups.py) that `sql` wraps with the partials as CTEs.
+    combine: str = ""
+
+
+def _global_model(name: str, doc: str, combine: str) -> Model:
+    return Model(
+        name=name,
+        deps=("fact_telemetry_event",),
+        doc=doc,
+        sql=with_partials(combine),
+        combine=combine,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -699,23 +716,21 @@ SELECT * FROM round_rollup
 """,
 )
 
-DIM_DEVICE = Model(
+DIM_DEVICE = _global_model(
     name="dim_device",
-    deps=("fact_telemetry_event",),
     doc="Device dimension (reference dim_device.sql).",
-    sql=f"""
-SELECT device AS device_id,
-       COUNT(*) AS total_rows,
+    combine="""
+SELECT device_id,
+       SUM(total_rows) AS total_rows,
        COUNT(DISTINCT course_id) AS courses_seen,
-       MIN(fix_timestamp) AS first_seen_ts,
-       MAX(fix_timestamp) AS last_seen_ts,
-       SUM(CASE WHEN is_timestamp_missing THEN 1 ELSE 0 END) AS ts_missing_rows,
-       MIN(battery_percentage) AS min_battery_pct,
-       MAX(battery_percentage) AS max_battery_pct,
-       {exact_avg("battery_percentage")} AS avg_battery_pct
-FROM fact_telemetry_event
-WHERE device IS NOT NULL
-GROUP BY device
+       MIN(first_seen_ts) AS first_seen_ts,
+       MAX(last_seen_ts) AS last_seen_ts,
+       SUM(ts_missing_rows) AS ts_missing_rows,
+       MIN(min_battery_pct) AS min_battery_pct,
+       MAX(max_battery_pct) AS max_battery_pct,
+       CAST(SUM(battery_sum) AS DOUBLE) / SUM(battery_cnt) AS avg_battery_pct
+FROM rollup_device
+GROUP BY device_id
 """,
 )
 
@@ -738,40 +753,11 @@ FROM fact_telemetry_event
 """,
 )
 
-GLOBAL_OVERVIEW = Model(
+GLOBAL_OVERVIEW = _global_model(
     name="global_overview",
-    deps=("fact_telemetry_event",),
-    doc="One-row global metrics (reference global_overview.sql; "
-    "APPROX_PERCENTILE -> percentile_approx, FILTER clause kept).",
-    sql=f"""
-WITH base AS (
-    SELECT course_id, round_id, device AS device_id, fix_timestamp,
-           is_timestamp_missing, is_location_padding, is_problem, is_complete,
-           is_nine_hole, is_secondary, is_auto_assigned, pace_gap
-    FROM fact_telemetry_event WHERE course_id IS NOT NULL
-),
-agg AS (
-    SELECT
-        COUNT(*) AS total_rows,
-        SUM(CASE WHEN is_location_padding THEN 1 ELSE 0 END) AS padding_rows,
-        SUM(CASE WHEN NOT is_location_padding THEN 1 ELSE 0 END) AS non_padding_rows,
-        COUNT(DISTINCT course_id) AS courses,
-        COUNT(DISTINCT round_id) AS distinct_rounds_all,
-        COUNT(DISTINCT CASE WHEN NOT is_location_padding THEN round_id END) AS distinct_rounds_non_padding,
-        COUNT(DISTINCT device_id) AS distinct_devices,
-        SUM(CASE WHEN is_timestamp_missing THEN 1 ELSE 0 END) AS ts_missing_rows,
-        SUM(CASE WHEN is_timestamp_missing AND NOT is_location_padding THEN 1 ELSE 0 END) AS ts_missing_non_padding_rows,
-        SUM(CASE WHEN NOT is_location_padding AND is_problem THEN 1 ELSE 0 END) AS problem_rows,
-        COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_complete, FALSE) THEN round_id END) AS complete_rounds,
-        COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_nine_hole, FALSE) THEN round_id END) AS nine_hole_rounds,
-        COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_secondary, FALSE) THEN round_id END) AS secondary_rounds,
-        COUNT(DISTINCT CASE WHEN NOT is_location_padding AND COALESCE(is_auto_assigned, FALSE) THEN round_id END) AS auto_assigned_rounds,
-        MIN(fix_timestamp) AS first_fix_ts,
-        MAX(fix_timestamp) AS last_fix_ts,
-        {exact_avg("pace_gap", "NOT is_location_padding")} AS avg_pace_gap_sec,
-        PERCENTILE_APPROX(pace_gap, 0.5) FILTER (WHERE NOT is_location_padding) AS median_pace_gap_sec
-    FROM base
-)
+    doc="One-row global metrics (reference global_overview.sql; the "
+    "APPROX_PERCENTILE median is the exact nearest-rank median).",
+    combine="""
 SELECT total_rows, padding_rows, non_padding_rows, courses,
     distinct_rounds_all, distinct_rounds_non_padding, distinct_devices,
     ts_missing_rows, ts_missing_non_padding_rows, problem_rows,
@@ -788,7 +774,46 @@ SELECT total_rows, padding_rows, non_padding_rows, courses,
     ROUND(100.0 * ts_missing_rows / NULLIF(total_rows, 0), 2) AS pct_ts_missing_rows,
     ROUND(100.0 * ts_missing_non_padding_rows / NULLIF(non_padding_rows, 0), 2) AS pct_ts_missing_non_padding_rows,
     first_fix_ts, last_fix_ts, avg_pace_gap_sec, median_pace_gap_sec
-FROM agg
+FROM (
+    SELECT
+        COALESCE(SUM(total_rows), 0) AS total_rows,
+        SUM(padding_rows) AS padding_rows,
+        SUM(non_padding_rows) AS non_padding_rows,
+        COUNT(*) AS courses,
+        SUM(ts_missing_rows) AS ts_missing_rows,
+        SUM(ts_missing_non_padding_rows) AS ts_missing_non_padding_rows,
+        SUM(problem_rows) AS problem_rows,
+        MIN(first_fix_ts) AS first_fix_ts,
+        MAX(last_fix_ts) AS last_fix_ts,
+        CAST(SUM(pace_gap_np_sum) AS DOUBLE) / SUM(pace_gap_np_cnt) AS avg_pace_gap_sec
+    FROM rollup_overview_course
+) c
+CROSS JOIN (
+    SELECT
+        COUNT(DISTINCT round_id) AS distinct_rounds_all,
+        COUNT(DISTINCT CASE WHEN any_non_padding THEN round_id END) AS distinct_rounds_non_padding,
+        COUNT(DISTINCT CASE WHEN complete_np THEN round_id END) AS complete_rounds,
+        COUNT(DISTINCT CASE WHEN nine_hole_np THEN round_id END) AS nine_hole_rounds,
+        COUNT(DISTINCT CASE WHEN secondary_np THEN round_id END) AS secondary_rounds,
+        COUNT(DISTINCT CASE WHEN auto_assigned_np THEN round_id END) AS auto_assigned_rounds
+    FROM rollup_overview_round
+) r
+CROSS JOIN (
+    SELECT COUNT(DISTINCT device_id) AS distinct_devices
+    FROM rollup_device WHERE course_id IS NOT NULL
+) d
+CROSS JOIN (
+    -- exact nearest-rank median: the smallest pace gap whose
+    -- cumulative count reaches CEIL(N / 2)
+    SELECT MIN(pace_gap) AS median_pace_gap_sec
+    FROM (
+        SELECT pace_gap,
+               SUM(n) OVER (ORDER BY pace_gap) AS cum,
+               SUM(n) OVER () AS total
+        FROM (SELECT pace_gap, SUM(n) AS n FROM rollup_overview_pace GROUP BY pace_gap) hist
+    ) ranked
+    WHERE cum >= CEIL(0.5 * total)
+) p
 """,
 )
 
@@ -959,55 +984,51 @@ def build_all(
 def incremental_update(
     spark: SparkSession,
     lake,
-    course_ids: list[str],
+    course_ids: list[str] | None,
     dim_facility_topology: DataFrame | None = None,
     fact_table: str = "silver.fact_telemetry_event",
     timings: dict[str, float] | None = None,
 ) -> dict[str, int]:
-    """Partition-scoped gold refresh after an incremental silver ingest.
+    """Write the gold models for `course_ids`, or for every course when
+    `course_ids` is None (the full build).
 
     The reference's dbt run rebuilds every model from the full fact on
     every invocation; at 100 TB that is a full-corpus re-aggregation to
-    absorb one course-day of new data.  This path exploits the gold
+    absorb one course-day of new data.  This path uses the gold
     partitioning (`course_id`, BASELINE gold table property):
 
     - models carrying a `course_id` column are rebuilt ONLY from the
-      affected courses (the `isin` filter prunes the fact's physical
-      course_id partitions — scan cost is O(new data), not O(corpus))
-      and land via `replace_partitions`, rewriting exactly the affected
-      course partitions;
-    - corpus-global models (no course_id column: global_overview and
-      dim_device) are derived by COMBINING per-course partial-aggregate
-      rollups (gold/rollups.py) that this refresh maintains from the
-      same pruned slice — no fact rescan; the first call seeds the
-      rollups with one full scan, every later refresh is O(new data).
-      Every global model has a combiner (`rollups.COMBINERS`, pinned
-      in tests/test_gold_incremental.py).
+      named courses (the `isin` filter prunes the fact's physical
+      course_id partitions, so the scan is O(new data)) and land via
+      `replace_partitions`; the full build overwrites them, dropping
+      courses gone from silver;
+    - the corpus-global models (those with a `combine`) run their
+      combine over the rollup partials (gold/rollups.py), which this
+      call lands from the same slice.  The full build, and the first
+      refresh, re-seed every rollup table with one fact scan.
 
-    Returns {model_name: rows_written}.  Result state matches a full
-    `build_all` + overwrite with two documented exceptions (both
-    gold/rollups.py): float averages agree within 1e-9 relative, and
-    `global_overview.median_pace_gap_sec` is bit-identical ONLY while
-    percentile_approx is in its exact regime (non-padding pace rows <=
-    accuracy 10000 — fixture scale, where the tests assert equality).
-    Past that, the two paths legitimately diverge within the sketch's
-    rank-error bound: the full build returns the approximate GK-sketch
-    value while this path returns the EXACT nearest-rank median — a
-    production-scale diff between them is expected behavior, not
-    corruption, and the incremental value is the more accurate one.
-    Otherwise incrementality is an optimization, never a semantics
-    change.  `timings`, if given, receives per-phase wall
-    seconds ("partitioned", "rollup_refresh", "global_combine").
+    Each written table equals its model text run over the whole fact:
+    a global model's text is its combine over the same partials.
+    Returns {model_name: rows_written}.  `timings`, if given, receives
+    per-phase wall seconds ("partitioned", "rollup_refresh",
+    "global_combine").
     """
     import time
 
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from . import rollups as _rollups
-
     fact_full = lake.read(fact_table)
-    fact_inc = fact_full.filter(F.col("course_id").isin(course_ids))
+    if course_ids is None:
+        fact = fact_full
+    else:
+        fact = fact_full.filter(F.col("course_id").isin(course_ids))
+
+    def write_by_course(table, df):
+        if course_ids is None:
+            lake.overwrite(table, df, partition_by=["course_id"])
+        else:
+            lake.replace_partitions(table, df, ["course_id"])
 
     # Row counts ride the write action itself via an Observation (the
     # run_silver pattern) — a post-write df.count() would recompute the
@@ -1043,28 +1064,26 @@ def incremental_update(
 
     written: dict[str, int] = {}
     t0 = time.perf_counter()
-    partitioned = GoldBuilder(spark).build(fact_inc, dim_facility_topology)
-    global_models = [n for n, df in partitioned.items() if "course_id" not in df.columns]
-    for name, df in partitioned.items():
-        if "course_id" in df.columns:
-            written[name] = _write_observed(
-                df, lambda d, n=name: lake.replace_partitions(f"gold.{n}", d, ["course_id"])
+    built = GoldBuilder(spark).build(fact, dim_facility_topology)
+    for model in MODELS:
+        if not model.combine:
+            written[model.name] = _write_observed(
+                built[model.name], lambda d, t=f"gold.{model.name}": write_by_course(t, d)
             )
     if timings is not None:
         timings["partitioned"] = round(time.perf_counter() - t0, 3)
 
-    if global_models:
-        t0 = time.perf_counter()
-        _rollups.refresh_rollups(spark, lake, fact_full, fact_inc, course_ids)
-        if timings is not None:
-            timings["rollup_refresh"] = round(time.perf_counter() - t0, 3)
+    t0 = time.perf_counter()
+    refresh_rollups(spark, lake, fact_full, course_ids)
+    if timings is not None:
+        timings["rollup_refresh"] = round(time.perf_counter() - t0, 3)
 
-        t0 = time.perf_counter()
-        for name in global_models:
-            df = _rollups.COMBINERS[name](spark, lake)
-            written[name] = _write_observed(
-                df, lambda d, n=name: lake.overwrite(f"gold.{n}", d)
+    t0 = time.perf_counter()
+    for model in MODELS:
+        if model.combine:
+            written[model.name] = _write_observed(
+                spark.sql(model.combine), lambda d, t=f"gold.{model.name}": lake.overwrite(t, d)
             )
-        if timings is not None:
-            timings["global_combine"] = round(time.perf_counter() - t0, 3)
+    if timings is not None:
+        timings["global_combine"] = round(time.perf_counter() - t0, 3)
     return written

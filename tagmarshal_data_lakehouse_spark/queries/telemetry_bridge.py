@@ -1881,10 +1881,9 @@ q_gold_global_overview = Query(
             spark, sf_dir, "global_overview", fact_sql=_SPARK_BRIDGE_EXT
         ).drop("median_pace_gap_sec")
     ),
-    # median_pace_gap_sec (percentile_approx) is the bridge's standing
-    # exclusion: approximate sketches are engine-specific by
-    # construction; every other column is a count, distinct-count,
-    # exact average or decimal percentage.
+    # median_pace_gap_sec is checked by gold_global_overview_rollup,
+    # whose oracle computes it; every other column is a count,
+    # distinct-count, exact average or decimal percentage.
     oracle=f"""
         WITH fact_telemetry_event AS ({_DUCK_BRIDGE_EXT}),
         base AS (
@@ -1935,24 +1934,20 @@ q_gold_global_overview = Query(
     doc="One-row global metrics silver_normalized model (gold/models.py "
     "GLOBAL_OVERVIEW, reference "
     "pipeline/gold/models/silver_normalized/global_overview.sql) over "
-    "the extended bridge; the percentile_approx median is excluded "
-    "(approximate sketches never hash cross-engine).",
+    "the extended bridge; the median is checked by "
+    "gold_global_overview_rollup.",
 )
 
-# The incremental-refresh pipeline for global_overview as ONE statement:
-# per-course partial-aggregate rollups (gold/rollups.py rollup_partials
-# — course-grain sums, (course,round) flag rollup, (course,pace_gap)
-# value histogram, (course,device) rollup) combined into the global row
-# (combine_global_overview). Shared verbatim between the Spark build
-# and the DuckDB oracle — pure ANSI, including the median: the rollup
-# path's exact nearest-rank median (value at 1-based rank CEIL(0.5*N)
-# via a windowed cumulative over the value histogram) is deterministic
-# and engine-portable, which the full build's PERCENTILE_APPROX sketch
-# is not — so this entry driver-verifies the column the
-# gold_global_overview bridge entry must exclude. The average rides
-# exact DECIMAL(30,12) partial sums (the dsum discipline; both engines
-# round the double at 12 fractional digits identically, then divide in
-# IEEE double).
+# DuckDB oracle for the global_overview model text (gold/models.py:
+# its combine over the per-course partials of gold/rollups.py): the
+# partials and the combine restated as one ANSI statement.  The model's
+# median is the exact nearest-rank value (1-based rank CEIL(0.5*N) via
+# a windowed cumulative over the value histogram), deterministic and
+# engine-portable, so this entry checks median_pace_gap_sec, which the
+# gold_global_overview entry drops.  The oracle's DECIMAL(30,12) sums
+# and the model's DECIMAL(28,10) sums are both exact for the bridge's
+# pace gaps, so both engines divide the same decimal total in IEEE
+# double.
 _GLOBAL_OVERVIEW_ROLLUP_BODY = """
 base AS (
     SELECT course_id, round_id, device AS device_id, fix_timestamp,
@@ -2049,40 +2044,26 @@ FROM agg
 """
 
 
-def _build_global_overview_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_views(spark, sf_dir)
-    return spark.sql(
-        f"WITH fact_telemetry_event AS ({_SPARK_BRIDGE_EXT}),"
-        f"{_GLOBAL_OVERVIEW_ROLLUP_BODY}"
-    )
-
-
 q_gold_global_overview_rollup = Query(
     name="gold_global_overview_rollup",
-    build=_build_global_overview_rollup,
+    build=lambda spark, sf_dir: _decimals_as_double(
+        _gold_on_bridge(spark, sf_dir, "global_overview", fact_sql=_SPARK_BRIDGE_EXT)
+    ),
     oracle=(
         lambda: f"WITH fact_telemetry_event AS ({_DUCK_BRIDGE_EXT}),"
         f"{_GLOBAL_OVERVIEW_ROLLUP_BODY}"
     )(),
-    doc="global_overview derived the INCREMENTAL way (gold/rollups.py):"
-    " per-course partial rollups combined into the global row, as one"
-    " shared-text statement. Unlike the full-build bridge entry this"
-    " one driver-verifies median_pace_gap_sec — the rollup path's"
-    " exact nearest-rank median is engine-portable where the"
-    " full build's PERCENTILE_APPROX sketch is not.",
+    doc="The global_overview model text (per-course partials and their"
+    " combine, gold/rollups.py) against the rollup statement on DuckDB."
+    " Unlike gold_global_overview this entry checks median_pace_gap_sec:"
+    " the model's exact nearest-rank median is engine-portable.",
 )
 
-# The incremental-refresh pipeline for dim_device as ONE statement:
-# (course, device)-grain partials (gold/rollups.py rollup_partials
-# "gold._rollup_device") merged up to device grain
-# (combine_dim_device).  COUNT(DISTINCT course_id) merges because the
-# rollup keeps course grain, not per-course counts; the average rides
-# the exact DECIMAL(30,12) battery sum (the dsum discipline), so the
-# combine is merge-order independent — the property that makes the
-# incremental path equal the full build.  Shared verbatim between the
-# Spark build and the DuckDB oracle; driver-verifies the SECOND
-# registered combiner the way gold_global_overview_rollup verifies the
-# first (r13).
+# DuckDB oracle for the dim_device model text run the way
+# gold_global_overview_rollup runs global_overview: (course, device)
+# partials merged up to device grain.  COUNT(DISTINCT course_id) merges
+# because the partial keeps course grain; the battery average is an
+# exact decimal sum, so the merge order does not matter.
 _DIM_DEVICE_ROLLUP_BODY = """
 base AS (
     SELECT course_id, device AS device_id, fix_timestamp,
@@ -2114,26 +2095,17 @@ FROM rollup_device GROUP BY device_id ORDER BY device_id
 """
 
 
-def _build_dim_device_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_views(spark, sf_dir)
-    return spark.sql(
-        f"WITH fact_telemetry_event AS ({_SPARK_BRIDGE}),"
-        f"{_DIM_DEVICE_ROLLUP_BODY}"
-    )
-
-
 q_gold_dim_device_rollup = Query(
     name="gold_dim_device_rollup",
-    build=_build_dim_device_rollup,
+    build=lambda spark, sf_dir: _gold_on_bridge(spark, sf_dir, "dim_device"),
     oracle=(
         lambda: f"WITH fact_telemetry_event AS ({_DUCK_BRIDGE}),"
         f"{_DIM_DEVICE_ROLLUP_BODY}"
     )(),
-    doc="dim_device derived the INCREMENTAL way (gold/rollups.py):"
-    " (course, device)-grain partials merged to device grain, as one"
-    " shared-text statement — the driver-grade check on the second"
-    " registered combiner (COUNT(DISTINCT course_id) merging from the"
-    " course-grain rollup; exact DECIMAL battery sum).",
+    doc="The dim_device model text (device partials and their combine,"
+    " gold/rollups.py) against the rollup statement on DuckDB:"
+    " COUNT(DISTINCT course_id) merged from the course-grain partial and"
+    " the exact decimal battery sum.",
 )
 
 q_gold_global_course_summary = Query(

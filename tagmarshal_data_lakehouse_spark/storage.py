@@ -37,7 +37,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
@@ -231,11 +231,9 @@ class Lakehouse:
         return df.select(*cols)
 
     @staticmethod
-    def _cluster_for_write(
-        df: DataFrame, partition_by: list[str], files_per_partition: int
-    ) -> DataFrame:
-        """Co-locate each output partition's rows into files_per_partition
-        tasks before a partitionBy write.
+    def _cluster_for_write(df: DataFrame, partition_by: list[str]) -> DataFrame:
+        """Co-locate each output partition's rows into one task before a
+        partitionBy write.
 
         Without this, every upstream task holds rows for ~every leaf
         partition and writes a sliver into each dir — the silver/gold
@@ -243,45 +241,10 @@ class Lakehouse:
         across 1,984 leaf dirs (exactly shuffle_width files per dir),
         and every downstream model paid ~20 s of file-open tax per scan.
         One hash shuffle on the partition keys collapses that to one
-        file per dir.  files_per_partition > 1 adds a deterministic
-        row-hash salt so one giant partition (a hot course-day at
-        100 TB) spreads over UP TO that many tasks instead of
-        serializing in one — the writer-side mirror of join salting
-        (up to, not exactly: distinct salt values can still collide in
-        the shuffle partitioner, and AQE coalescing re-merges buckets
-        that fall below the advisory partition size — both of which are
-        the right call for file sizing, so neither is defeated here)."""
+        file per dir."""
         if not partition_by:
             return df
-
-        def _hashable(dt: T.DataType) -> bool:
-            # xxhash64 rejects MapType at analysis time (no canonical
-            # element order), at any nesting depth
-            if isinstance(dt, T.MapType):
-                return False
-            if isinstance(dt, T.ArrayType):
-                return _hashable(dt.elementType)
-            if isinstance(dt, T.StructType):
-                return all(_hashable(f.dataType) for f in dt.fields)
-            return True
-
-        keys: list[Column] = [F.col(c) for c in partition_by]
-        if files_per_partition > 1:
-            # Deterministic row-content salt (task retries must re-land
-            # rows in the same bucket), over the hashable columns only.
-            # Constraint accepted with eyes open: byte-identical
-            # duplicate rows always share a bucket, so a hot partition
-            # made ENTIRELY of duplicates does not spread — content
-            # hashing cannot separate identical content, and a
-            # nondeterministic salt would break retry idempotency.
-            salt_cols = [
-                F.col(f.name) for f in df.schema.fields if _hashable(f.dataType)
-            ]
-            if salt_cols:
-                keys.append(
-                    F.pmod(F.xxhash64(*salt_cols), F.lit(files_per_partition))
-                )
-        return df.repartition(*keys)
+        return df.repartition(*[F.col(c) for c in partition_by])
 
     def write_partitioned(
         self,
@@ -289,11 +252,10 @@ class Lakehouse:
         df: DataFrame,
         partition_by: list[str],
         mode: str = "append",
-        files_per_partition: int = 1,
     ) -> None:
         self._snapshot(table, f"write_partitioned({mode})")
         (
-            self._cluster_for_write(df, partition_by, files_per_partition)
+            self._cluster_for_write(df, partition_by)
             .write.mode(mode)
             .partitionBy(*partition_by)
             .parquet(self.path(table))
@@ -305,7 +267,6 @@ class Lakehouse:
         table: str,
         df: DataFrame,
         partition_by: list[str],
-        files_per_partition: int = 1,
     ) -> None:
         """Idempotent partition rewrite: overwrite ONLY the partitions
         present in df.  Re-running an ingest for the same
@@ -319,7 +280,7 @@ class Lakehouse:
             return
         self._snapshot(table, "replace_partitions")
         (
-            self._cluster_for_write(df, partition_by, files_per_partition)
+            self._cluster_for_write(df, partition_by)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
@@ -332,7 +293,6 @@ class Lakehouse:
         table: str,
         df: DataFrame,
         partition_by: list[str] | None = None,
-        files_per_partition: int = 1,
     ) -> None:
         """Drop-and-recreate (reference S15, generate_sections_per_hole.py:112-118).
         Partitioned overwrites get the same key clustering as
@@ -349,7 +309,7 @@ class Lakehouse:
         the incoming frame survived an 'overwrite')."""
         self._snapshot(table, "overwrite")
         if partition_by:
-            df = self._cluster_for_write(df, partition_by, files_per_partition)
+            df = self._cluster_for_write(df, partition_by)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.option("partitionOverwriteMode", "static").partitionBy(*partition_by)

@@ -273,9 +273,9 @@ def pq_topk(
 
     ONE scan of the coded candidates, broadcast-joined to the tiny
     query-table frame (each query row carries its (m x k) ADC table as
-    an array<array<double>>) — same join geometry as cosine_topk_fast,
-    but each (query, candidate) pair costs m integer lookups instead of
-    a d-element float fold: the at-scale win is both bandwidth (codes
+    an array<array<double>>) — the brute-force broadcast join, but
+    each (query, candidate) pair costs m integer lookups instead of a
+    d-element float fold: the at-scale win is both bandwidth (codes
     are ~d/8 bytes) and compute (m << d).
     """
     # codebooks= lets a caller composing several PQ indexes over the

@@ -10,10 +10,6 @@ Paired correctness-baseline / scale-path implementations throughout:
 - `cosine_topk_lsh`: random-hyperplane LSH bucketing (sign sketch) —
   the 100 TB path: candidates only from matching buckets, shuffle keyed
   by bucket hash, then exact re-scoring of candidates.
-- `cosine_topk_fast`: same brute force but with JVM `aggregate`/
-  `zip_with` double math (no explode) — the single-engine fast path used
-  by bench; not oracle-checked because float summation order differs
-  across engines.
 - `cosine_near_duplicates` / `cosine_near_duplicates_lsh`: thresholded
   near-duplicate PAIRS (embedding-space dedup for a training corpus) —
   exact all-pairs baseline vs banded-hyperplane bucketing that never
@@ -68,7 +64,7 @@ def _guard_query_bound(n_queries: int, bound: int, fn: str) -> None:
     if n_queries > bound:
         raise ValueError(
             f"{fn}: n_queries={n_queries} exceeds the {bound}-query bound. "
-            "Use cosine_topk (LSH/IVF scale paths) for large query sets; "
+            "Use cosine_topk_lsh or ivf_topk for large query sets; "
             "the exact form exists only as a bounded correctness baseline."
         )
 
@@ -118,38 +114,6 @@ def _gemm_prune_mask(scores: np.ndarray, c_ids: np.ndarray, t: int) -> np.ndarra
         mask[i] = False
         mask[i, cols[order[:t]]] = True
     return mask
-
-
-def cosine_topk(
-    embeddings: DataFrame,
-    n_queries: int = 20,
-    k: int = 3,
-    method: str = "lsh",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    **kwargs,
-) -> DataFrame:
-    """Default ANN entry point. Routes to the scale paths by name:
-    ``lsh`` (hyperplane-bucketed, the default), ``ivf`` (IVF-Flat), or
-    ``fast`` (brute force, JVM double math — only for bounded query
-    sets).  The decimal-exact brute force is deliberately NOT reachable
-    here — call :func:`cosine_topk_exact` explicitly; it is a
-    correctness baseline with a hard query-count cap, never a serving
-    path.
-    """
-    methods = {
-        "lsh": cosine_topk_lsh,
-        "ivf": ivf_topk,
-        "fast": cosine_topk_fast,
-    }
-    if method not in methods:
-        raise ValueError(
-            f"cosine_topk: unknown method {method!r}; choose from {sorted(methods)} "
-            "(or call cosine_topk_exact directly for the bounded exact baseline)"
-        )
-    return methods[method](
-        embeddings, n_queries=n_queries, k=k, id_col=id_col, vec_col=vec_col, **kwargs
-    )
 
 
 def _norms_decimal(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -202,48 +166,6 @@ def cosine_topk_exact(
                 6,
             ),
         )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("candidate_id").asc())
-    return (
-        scored.withColumn("nn_rank", F.row_number().over(w))
-        .filter(F.col("nn_rank") <= k)
-        .select("query_id", "candidate_id", "cosine", F.col("nn_rank").cast("int").alias("nn_rank"))
-    )
-
-
-def cosine_topk_fast(
-    embeddings: DataFrame,
-    n_queries: int = 20,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Bench-path brute force: JVM higher-order functions, no explode.
-
-    One broadcast of the (small) query set against a scan of candidates —
-    at scale the candidate side stays partitioned and never shuffles.
-    """
-    _guard_query_bound(n_queries, MAX_BROADCAST_QUERIES, "cosine_topk_fast")
-    # Per-side norms are computed ONCE per row before the pair join (r13
-    # optimization pass, guide §1.2 per-task work): evaluated per pair,
-    # each O(dim) self-dot fold ran |Q| times per candidate and |C|
-    # times per query.  Same expression over the same array — the
-    # rounded cosine is bit-identical.
-    vecs = embeddings.select(F.col(id_col), F.col(vec_col))
-    queries = vecs.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.expr(_DOT.format(a=vec_col, b=vec_col)).alias("qn2"),
-    )
-    cands = vecs.select(
-        F.col(id_col).alias("candidate_id"),
-        F.col(vec_col).alias("cvec"),
-        F.expr(_DOT.format(a=vec_col, b=vec_col)).alias("cn2"),
-    )
-    dot = F.expr(_DOT.format(a="qvec", b="cvec"))
-    scored = (
-        cands.join(F.broadcast(queries), F.col("query_id") != F.col("candidate_id"))
-        .withColumn("cosine", F.round(dot / (F.sqrt(F.col("qn2")) * F.sqrt(F.col("cn2"))), 6))
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("candidate_id").asc())
     return (

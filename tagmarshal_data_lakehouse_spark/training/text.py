@@ -64,8 +64,7 @@ def bpe_ish_token_count(col: Column) -> Column:
 # parser produces the same expression tree the Column API did, so every
 # value is bit-identical (oracle-checked on doc_lang_id /
 # doc_quality_scores / doc_curation_pipeline every sweep).  The public
-# functions accept a column NAME (fast single-parse path) or a Column
-# (legacy tree construction, for callers holding derived expressions).
+# functions take a column NAME.
 # ---------------------------------------------------------------------
 
 
@@ -110,31 +109,17 @@ def _language_id_sql(c_sql: str, langs: tuple[str, ...]) -> str:
     )
 
 
-def stopword_hits(col: "Column | str", lang: str) -> Column:
-    """Number of tokens that are stopwords of `lang` (token-exact match).
-
-    Pass the column NAME for the single-parse SQL path (see the SQL-twin
-    note above); a Column builds the identical tree via the Column API.
-    """
-    if isinstance(col, str):
-        return F.expr(_stopword_hits_sql(_sql_ref(col), lang))
-    words = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(words, t))).cast("int")
+def stopword_hits(col: str, lang: str) -> Column:
+    """Number of tokens in column `col` that are stopwords of `lang`
+    (token-exact match), parsed as one SQL expression."""
+    return F.expr(_stopword_hits_sql(_sql_ref(col), lang))
 
 
-def language_id(col: "Column | str", langs: tuple[str, ...] = ("en", "de", "es", "fr")) -> Column:
-    """Deterministic argmax over per-language stopword hit counts;
-    ties broken by language code order in `langs`; 'und' when no hits.
-
-    Accepts a column name (single-parse SQL path) or a Column."""
-    if isinstance(col, str):
-        return F.expr(_language_id_sql(_sql_ref(col), langs))
-    hit_cols = {lang: stopword_hits(col, lang) for lang in langs}
-    best = F.greatest(*hit_cols.values()) if len(hit_cols) > 1 else next(iter(hit_cols.values()))
-    expr: Column = F.lit("und")
-    for lang in reversed(langs):
-        expr = F.when(hit_cols[lang] == best, F.lit(lang)).otherwise(expr)
-    return F.when(best == 0, F.lit("und")).otherwise(expr)
+def language_id(col: str, langs: tuple[str, ...] = ("en", "de", "es", "fr")) -> Column:
+    """Deterministic argmax over per-language stopword hit counts of
+    column `col`; ties broken by language code order in `langs`; 'und'
+    when no hits."""
+    return F.expr(_language_id_sql(_sql_ref(col), langs))
 
 
 def punct_count(col: Column) -> Column:

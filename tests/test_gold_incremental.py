@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from tagmarshal_data_lakehouse_spark import silver
 from tagmarshal_data_lakehouse_spark.gold.models import (
+    GLOBAL_OVERVIEW,
     GoldBuilder,
     incremental_update,
 )
@@ -43,53 +44,28 @@ def lake_with_gold(spark, tmp_path_factory):
     lake.replace_partitions(
         "silver.fact_telemetry_event", fact, ["course_id", "ingest_date", "event_date"]
     )
-    # full build, partitioned by course_id where the model carries it
-    models = GoldBuilder(spark).build(lake.read("silver.fact_telemetry_event"))
-    for name, df in models.items():
-        part = ["course_id"] if "course_id" in df.columns else None
-        lake.overwrite(f"gold.{name}", df, partition_by=part)
-    return lake, sorted(models)
+    written = incremental_update(spark, lake, None)  # the full build
+    return lake, sorted(written)
 
 
-# Float averages the rollup-combined global models derive from exact
-# DECIMAL sums; the full build's AVG() sums doubles in partition order,
-# so the two can differ in the last ~1e-12 relative (gold/rollups.py
-# docstring).  Every other column — counts, distincts, timestamps,
-# ROUND()ed percentages, the exact-regime median — must match exactly.
-_FLOAT_TOL_COLS = {
-    "global_overview": {"avg_pace_gap_sec"},
-    "dim_device": {"avg_battery_pct"},
-}
+def _rows(df):
+    return (
+        df.columns,
+        sorted(
+            (tuple(r) for r in df.collect()),
+            key=lambda t: tuple((v is None, str(v)) for v in t),
+        ),
+    )
 
 
 def _snapshot(spark, lake, names):
-    out = {}
-    for name in names:
-        df = lake.read(f"gold.{name}")
-        out[name] = (
-            df.columns,
-            sorted(
-                (tuple(r) for r in df.collect()),
-                key=lambda t: tuple((v is None, str(v)) for v in t),
-            ),
-        )
-    return out
+    return {name: _rows(lake.read(f"gold.{name}")) for name in names}
 
 
 def _assert_snapshots_match(a, b):
     assert set(a) == set(b)
     for name in a:
-        cols_a, rows_a = a[name]
-        cols_b, rows_b = b[name]
-        assert cols_a == cols_b, name
-        assert len(rows_a) == len(rows_b), name
-        tol_cols = _FLOAT_TOL_COLS.get(name, set())
-        for ra, rb in zip(rows_a, rows_b):
-            for col, va, vb in zip(cols_a, ra, rb):
-                if col in tol_cols and va is not None and vb is not None:
-                    assert va == pytest.approx(vb, rel=1e-9), (name, col)
-                else:
-                    assert va == vb, (name, col, va, vb)
+        assert a[name] == b[name], name
 
 
 def test_incremental_noop_refresh_matches_full(spark, lake_with_gold):
@@ -115,10 +91,7 @@ def test_incremental_absorbs_new_partition(spark, lake_with_gold, tmp_path):
     inc = _snapshot(spark, lake, names)
 
     # ground truth: full rebuild from the same silver state
-    models = GoldBuilder(spark).build(lake.read("silver.fact_telemetry_event"))
-    for name, df in models.items():
-        part = ["course_id"] if "course_id" in df.columns else None
-        lake.overwrite(f"gold.{name}", df, partition_by=part)
+    incremental_update(spark, lake, None)
     full = _snapshot(spark, lake, names)
     _assert_snapshots_match(inc, full)
 
@@ -186,11 +159,7 @@ def test_global_combine_reads_rollup_state_not_the_fact(spark, tmp_path):
     lake.replace_partitions(
         "silver.fact_telemetry_event", fact, ["course_id", "ingest_date", "event_date"]
     )
-    models = GoldBuilder(spark).build(lake.read("silver.fact_telemetry_event"))
-    for name, df in models.items():
-        part = ["course_id"] if "course_id" in df.columns else None
-        lake.overwrite(f"gold.{name}", df, partition_by=part)
-    incremental_update(spark, lake, ["course_a"])  # seeds the rollups
+    incremental_update(spark, lake, None)  # the full build seeds the rollups
     assert lake.read("gold.global_overview").first()["courses"] == 2
 
     # silver loses course_a entirely; only course_b is refreshed
@@ -207,12 +176,12 @@ def test_global_combine_reads_rollup_state_not_the_fact(spark, tmp_path):
 
 
 def test_combined_median_matches_percentile_approx_in_exact_regime(spark, tmp_path):
-    """gold/rollups.py derives the global median as the exact
-    nearest-rank value (1-based rank CEIL(0.5*N)) from the pace value
-    histogram; PERCENTILE_APPROX returns the same value whenever its
-    sketch retains every sample (row count <= accuracy) — pin that
-    equality across odd/even counts and heavy duplication."""
-    from tagmarshal_data_lakehouse_spark.gold import rollups
+    """global_overview's median is the exact nearest-rank value (1-based
+    rank CEIL(0.5*N)) from the pace value histogram; PERCENTILE_APPROX
+    returns the same value whenever its sketch retains every sample
+    (row count <= accuracy).  Pin that equality across odd/even counts
+    and heavy duplication, running the model's own text."""
+    from tagmarshal_data_lakehouse_spark.schemas import FACT_TELEMETRY_EVENT
 
     lake = Lakehouse(spark, str(tmp_path / "wh"))
     cases = [
@@ -227,24 +196,10 @@ def test_combined_median_matches_percentile_approx_in_exact_regime(spark, tmp_pa
             [("c", v, False) for v in vals],
             "course_id string, pace_gap double, is_location_padding boolean",
         )
-        hist = (
-            df.filter(~F.col("is_location_padding"))
-            .groupBy("course_id", "pace_gap")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+        lake.align_to_schema(df, FACT_TELEMETRY_EVENT).createOrReplaceTempView(
+            "fact_telemetry_event"
         )
-        lake.overwrite("gold._rollup_overview_pace", hist)
-        lake.read("gold._rollup_overview_pace").createOrReplaceTempView(
-            "rt__rollup_overview_pace"
-        )
-        combined = spark.sql(
-            """
-            WITH hist AS (SELECT pace_gap, SUM(n) AS n
-                          FROM rt__rollup_overview_pace GROUP BY pace_gap),
-            ranked AS (SELECT pace_gap, SUM(n) OVER (ORDER BY pace_gap) AS cum,
-                              SUM(n) OVER () AS total FROM hist)
-            SELECT MIN(pace_gap) AS m FROM ranked WHERE cum >= CEIL(0.5 * total)
-            """
-        ).first()["m"]
+        combined = spark.sql(GLOBAL_OVERVIEW.sql).first()["median_pace_gap_sec"]
         reference = df.agg(F.expr("percentile_approx(pace_gap, 0.5)")).first()[0]
         assert combined == reference, (i, combined, reference)
 
@@ -261,11 +216,7 @@ def test_refreshing_a_fully_deleted_course_drops_its_rollup_state(spark, tmp_pat
     lake.replace_partitions(
         "silver.fact_telemetry_event", fact, ["course_id", "ingest_date", "event_date"]
     )
-    models = GoldBuilder(spark).build(lake.read("silver.fact_telemetry_event"))
-    for name, df in models.items():
-        part = ["course_id"] if "course_id" in df.columns else None
-        lake.overwrite(f"gold.{name}", df, partition_by=part)
-    incremental_update(spark, lake, ["course_a"])  # seeds the rollups
+    incremental_update(spark, lake, None)  # the full build seeds the rollups
     assert lake.read("gold.global_overview").first()["courses"] == 2
 
     # course_a's silver data is deleted, and course_a IS refreshed
@@ -303,11 +254,7 @@ def test_partially_retracted_course_drops_per_table_rollup_state(spark, tmp_path
     lake.replace_partitions(
         "silver.fact_telemetry_event", fact, ["course_id", "ingest_date", "event_date"]
     )
-    models = GoldBuilder(spark).build(lake.read("silver.fact_telemetry_event"))
-    for name, df in models.items():
-        part = ["course_id"] if "course_id" in df.columns else None
-        lake.overwrite(f"gold.{name}", df, partition_by=part)
-    incremental_update(spark, lake, ["course_a"])  # seeds the rollups
+    incremental_update(spark, lake, None)  # the full build seeds the rollups
     pace_a = (
         lake.read("gold._rollup_overview_pace")
         .filter(F.col("course_id") == "course_a").count()
@@ -369,17 +316,37 @@ def test_partially_retracted_course_drops_per_table_rollup_state(spark, tmp_path
     } == only_b_devices
 
 
-def test_every_global_model_has_a_combiner(spark):
-    """`incremental_update` derives every model without a course_id
-    column from its `rollups.COMBINERS` entry; it has no other refresh
-    path for them.  Only the schemas matter, so the DAG is built on an
-    empty fact."""
-    from tagmarshal_data_lakehouse_spark.gold.rollups import COMBINERS
-    from tagmarshal_data_lakehouse_spark.schemas import FACT_TELEMETRY_EVENT
-
-    models = GoldBuilder(spark, cache_fact_rounds=False).build(
-        spark.createDataFrame([], FACT_TELEMETRY_EVENT)
+def test_full_build_reseeds_the_rollups(spark, tmp_path):
+    """The full build rewrites the rollups along with the models: a
+    refresh after it must not fall back to partials seeded before it,
+    which would drop every ingest the full build absorbed."""
+    lake = Lakehouse(spark, str(tmp_path / "warehouse"))
+    fact = _silver_fact(spark, tmp_path, ["course_a", "course_b", "course_c"])
+    lake.replace_partitions(
+        "silver.fact_telemetry_event", fact, ["course_id", "ingest_date", "event_date"]
     )
-    global_models = {n for n, df in models.items() if "course_id" not in df.columns}
-    assert global_models
-    assert global_models <= set(COMBINERS)
+    incremental_update(spark, lake, ["course_a"])  # seeds the rollups
+    seeded = lake.read("gold.global_overview").first()
+
+    # new ingest for course_c, absorbed by a full build
+    (tmp_path / "c2").mkdir()
+    extra = _silver_fact(spark, tmp_path / "c2", ["course_c"]).withColumn(
+        "ingest_date", F.lit("2024-01-17")
+    ).withColumn("round_id", F.concat(F.col("round_id"), F.lit("_v2")))
+    lake.replace_partitions(
+        "silver.fact_telemetry_event", extra, ["course_id", "ingest_date", "event_date"]
+    )
+    globals_ = ["global_overview", "dim_device"]
+    incremental_update(spark, lake, None)
+    full = _snapshot(spark, lake, globals_)
+    row = lake.read("gold.global_overview").first()
+    assert row["total_rows"] > seeded["total_rows"]
+    assert row["distinct_rounds_all"] > seeded["distinct_rounds_all"]
+
+    incremental_update(spark, lake, ["course_b"])
+    _assert_snapshots_match(_snapshot(spark, lake, globals_), full)
+    # ... and both equal the model texts run over the whole fact
+    built = GoldBuilder(spark, cache_fact_rounds=False).build(
+        lake.read("silver.fact_telemetry_event")
+    )
+    _assert_snapshots_match({name: _rows(built[name]) for name in globals_}, full)

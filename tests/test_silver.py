@@ -266,7 +266,7 @@ def test_run_silver_releases_cache_on_failed_write(
     persisted RDD behind."""
     lake = Lakehouse(spark, str(tmp_path / "warehouse"))
 
-    def failing_write(table, df, partition_by, files_per_partition=1):
+    def failing_write(table, df, partition_by):
         df.count()  # fills the cache, as the real write does
         raise RuntimeError("write failed")
 

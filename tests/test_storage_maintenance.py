@@ -136,18 +136,14 @@ def test_compact_preserves_hive_partition_layout(spark, tmp_path):
         (F.col("id") * 2.0).alias("v"),
     )
     # partitioned writes cluster to one file per leaf since r11, so a
-    # FRAGMENTED partitioned table (compact's raison d'etre) now takes
-    # the salt knob with AQE coalescing off, as in the salt-spread test
-    original = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        lake.overwrite(
-            "silver.part_tbl", df, partition_by=["course_id"], files_per_partition=8
+    # FRAGMENTED partitioned table (compact's raison d'etre) is built
+    # from repeated appends: one file per leaf per write
+    for part in range(4):
+        lake.write_partitioned(
+            "silver.part_tbl", df.filter(F.col("k") % 4 == part), ["course_id"], mode="append"
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", original)
     n_before = len(lake.table_data_files("silver.part_tbl"))
-    assert n_before > 3  # genuinely fragmented (salted multi-file leaves)
+    assert n_before > 3  # genuinely fragmented (multi-file leaves)
     before = sorted(map(tuple, lake.read("silver.part_tbl").collect()))
 
     # no partition_by passed: compact must detect and keep the layout
@@ -198,54 +194,6 @@ def test_partitioned_write_is_clustered_one_file_per_leaf(spark, tmp_path):
     assert set(counts.values()) == {1}, counts
     # row fidelity through the clustering shuffle
     assert lake.read("t.clustered").count() == 4_000
-
-
-def test_partitioned_write_salt_spreads_hot_partition(spark, tmp_path):
-    """files_per_partition > 1 salts each leaf over that many writer
-    tasks — the escape hatch for one hot course-day serializing into a
-    single task at 100 TB. AQE partition coalescing is disabled for the
-    pin: at fixture size it (correctly) merges the salted buckets back
-    below the advisory partition size, which is exactly the production
-    guard against the salt itself re-creating tiny files."""
-    lake = Lakehouse(spark, str(tmp_path / "wh2"))
-    df = spark.range(9_000).select(
-        F.lit(0).alias("p"), F.col("id").alias("v")  # ONE hot partition
-    )
-    original = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try:
-        lake.write_partitioned("t.salted", df, ["p"], files_per_partition=4)
-    finally:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", original)
-    counts = _leaf_file_counts(lake, "t.salted")
-    # UP TO files_per_partition: distinct salt values can collide in
-    # the shuffle partitioner, so the pin is "spread happened, bounded
-    # by the knob", not an exact count
-    assert len(counts) == 1
-    n_files = next(iter(counts.values()))
-    assert 2 <= n_files <= 4, counts
-    assert lake.read("t.salted").count() == 9_000
-
-
-def test_partitioned_write_salt_tolerates_unhashable_columns(spark, tmp_path):
-    """The salt hashes row content — but xxhash64 rejects MapType at
-    analysis time, so the salt must restrict itself to hashable columns
-    instead of failing the whole write (ADVICE r11). A frame that is
-    ALL map columns beyond the key simply skips the salt (one file)."""
-    lake = Lakehouse(spark, str(tmp_path / "whm"))
-    df = spark.range(200).select(
-        F.lit(0).alias("p"),
-        F.col("id").alias("v"),
-        F.create_map(F.lit("k"), F.col("id")).alias("m"),
-    )
-    lake.write_partitioned("t.mapsalt", df, ["p"], files_per_partition=4)
-    assert lake.read("t.mapsalt").count() == 200
-
-    only_map = spark.range(50).select(
-        F.lit(1).alias("p"), F.create_map(F.lit("k"), F.col("id")).alias("m")
-    )
-    lake.write_partitioned("t.maponly", only_map, ["p"], files_per_partition=4)
-    assert lake.read("t.maponly").count() == 50
 
 
 def test_partitioned_overwrite_is_clustered_too(spark, tmp_path):

@@ -97,17 +97,6 @@ def test_ivf_probe_widening_increases_candidates(planted):
     assert n4 >= n1  # probing more cells can only add candidates
 
 
-def test_cosine_topk_fast_top1_matches_planted(planted):
-    out = similarity.cosine_topk_fast(planted, n_queries=2, k=3)
-    by_query = {}
-    for r in out.collect():
-        by_query.setdefault(r["query_id"], []).append(r)
-    top0 = min(by_query[0], key=lambda r: r["nn_rank"])
-    top1 = min(by_query[1], key=lambda r: r["nn_rank"])
-    assert top0["candidate_id"] == 100 and top0["cosine"] > 0.999
-    assert top1["candidate_id"] == 101 and top1["cosine"] > 0.999
-
-
 def test_hyperplane_buckets_deterministic_and_bounded(planted):
     a = {r["vec_id"]: r["bucket"] for r in similarity.hyperplane_buckets(planted, n_planes=6).collect()}
     b = {r["vec_id"]: r["bucket"] for r in similarity.hyperplane_buckets(planted, n_planes=6).collect()}
@@ -241,25 +230,12 @@ def test_bucket_col_degenerate_rows(degenerate):
     assert all(0 <= b < 2**n_planes for b in got.values())
 
 
-def test_cosine_topk_wrapper_routes_to_lsh_by_default(planted):
-    via_wrapper = similarity.cosine_topk(planted, n_queries=2, k=3)
-    direct = similarity.cosine_topk_lsh(planted, n_queries=2, k=3)
-    assert sorted(map(tuple, via_wrapper.collect())) == sorted(map(tuple, direct.collect()))
-
-
-def test_cosine_topk_wrapper_rejects_exact_and_unknown(planted):
-    with pytest.raises(ValueError, match="unknown method"):
-        similarity.cosine_topk(planted, method="exact")
-    with pytest.raises(ValueError, match="unknown method"):
-        similarity.cosine_topk(planted, method="bruteforce")
-
-
 def test_query_bound_guards(planted):
     """The exact baseline hard-caps its query count; broadcast paths cap
     at the broadcastable bound. Guards fire at plan-build time (no job)."""
     with pytest.raises(ValueError, match="exceeds the"):
         similarity.cosine_topk_exact(planted, n_queries=similarity.MAX_EXACT_QUERIES + 1)
-    for fn in (similarity.cosine_topk_fast, similarity.cosine_topk_lsh, similarity.ivf_topk):
+    for fn in (similarity.cosine_topk_lsh, similarity.ivf_topk):
         with pytest.raises(ValueError, match="exceeds the"):
             fn(planted, n_queries=similarity.MAX_BROADCAST_QUERIES + 1)
 
