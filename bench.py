@@ -116,6 +116,14 @@ def _calibration(spark, sf_dir: str) -> dict:
     }
 
 
+def _jit_compile_s(spark) -> float:
+    """Seconds the driver JVM's JIT compilers have spent so far
+    (`CompilationMXBean.getTotalCompilationTime`), so a shift in the cold
+    timings can be read against the JIT work behind it."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return round(mx.getCompilationMXBean().getTotalCompilationTime() / 1000, 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -164,6 +172,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
+    jit_compile_s = _jit_compile_s(spark)
     total = round(sum(timings.values()), 3)
     print(
         json.dumps(
@@ -177,6 +186,7 @@ def main() -> None:
                 "value_cold": round(sum(cold.values()), 3),
                 "queries_cold": cold,
                 "calibration": calibration,
+                "jit_compile_s": jit_compile_s,
             }
         )
     )

@@ -1040,15 +1040,17 @@ def incremental_update(
         try:
             return int(obs.get["n"])
         except Exception as exc:
-            # Defensive branch for a metrics row that never materialized.
-            # On Spark 4.1.2 an empty dynamic overwrite still returns
-            # {'n': 0} (verified empirically), so this path is expected
-            # to be dead there — but the observed-metrics contract for
-            # an AQE-propagated empty relation is version-dependent, so
-            # keep the fallback for other runtimes: CONFIRM the frame
-            # really is empty (a limit-1 probe, cheap) before decoding
-            # absent metrics as zero, and surface what was swallowed —
-            # a transient JVM error after a successful multi-row write
+            # Fires whenever a by-course model is empty, in the full
+            # build and in a course refresh alike (device_health_errors
+            # on courses with no low-battery fix, for one): the write
+            # clusters by course_id with a shuffle above the observed
+            # node, AQE replaces the empty stage with an empty relation,
+            # the observer leaves the final plan, and on Spark 4.1.2
+            # obs.get fails in PythonSQLUtils.toPyRow (AssertionError).
+            # Each firing costs one more job, the isEmpty() below.
+            # CONFIRM the frame really is empty before decoding absent
+            # metrics as zero, and surface what was swallowed: a
+            # transient JVM error after a successful multi-row write
             # must propagate, not silently record 0 rows.
             if df.isEmpty():
                 import logging

@@ -11,6 +11,26 @@ Scale posture: shuffle partitions default to the core count (not Spark's
 200) because local[N] has N execution slots; on a real cluster the caller
 passes ``shuffle_partitions`` sized to executors*cores*2-3.  AQE is on so
 post-shuffle partition counts adapt to the real data volume at any SF.
+
+JIT posture: the driver JVM runs with one C2 compiler thread
+(``-XX:CICompilerCount=2``: one C1 + one C2, where HotSpot's ergonomics
+pick 1 + 2 on 4 CPUs).  Every entry point starts a fresh driver, and
+its compiler threads compete with the task slots for the same cores.
+Per-thread CPU of one 4-core benchmark run (``tools/thread_cpu.py``):
+the compiler threads used 104 of 180 s of the `ingest` process tree
+(C2 89 s, spread over thousands of tier-4 compiles of Catalyst,
+Janino, ANTLR and serialization code, not of generated classes) and
+65 of 118 s of `analytics`.  With the cap C2 used 50 and 33 s, the
+trees 143 and 101 s, and task and py4j threads rose by 3 s at most.
+The benchmark's timed windows kept their wall time; in a 75-second
+``bench.py`` run warm timings held and cold ones lean about 3% slower,
+since late-compiled code runs longer at the lower tiers (SCALE.md,
+"JIT compiler share (4 cores)").
+The flag goes in ``spark.driver.defaultJavaOptions``, which Spark
+places before ``spark.driver.extraJavaOptions``; HotSpot takes the
+last occurrence of a flag, so a caller restores more compiler threads
+with a later ``-XX:CICompilerCount=N`` in
+``extra_conf={"spark.driver.extraJavaOptions": ...}``.
 """
 
 from __future__ import annotations
@@ -177,6 +197,9 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # one C2 compiler thread (see the module docstring); a caller's
+        # extraJavaOptions come after this and win
+        .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)

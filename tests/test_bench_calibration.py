@@ -53,3 +53,15 @@ def test_bench_emits_calibration_key():
     src = inspect.getsource(bench.main)
     assert '"calibration": calibration' in src
     assert "calibration = _calibration(spark, sf_dir)" in src
+
+
+def test_bench_emits_jit_compile_s(spark):
+    """The driver's JIT compile seconds, read after the last query, ride
+    the JSON line next to the timings they explain."""
+    import inspect
+
+    assert bench._jit_compile_s(spark) > 0
+    src = inspect.getsource(bench.main)
+    assert '"jit_compile_s": jit_compile_s' in src
+    # read once every query has run, not before the loop
+    assert src.index("jit_compile_s = _jit_compile_s(spark)") > src.index("for name in HEADLINE")

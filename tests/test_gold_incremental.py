@@ -3,6 +3,7 @@ indistinguishable from a full rebuild."""
 
 from __future__ import annotations
 
+import logging
 import os
 import subprocess
 import sys
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from tagmarshal_data_lakehouse_spark import silver
 from tagmarshal_data_lakehouse_spark.gold.models import (
     GLOBAL_OVERVIEW,
+    MODELS,
     GoldBuilder,
     incremental_update,
 )
@@ -94,6 +96,33 @@ def test_incremental_absorbs_new_partition(spark, lake_with_gold, tmp_path):
     incremental_update(spark, lake, None)
     full = _snapshot(spark, lake, names)
     _assert_snapshots_match(inc, full)
+
+
+def test_course_refresh_reports_each_models_row_count(spark, lake_with_gold, caplog):
+    """Each written count is the row count of the model over what it
+    was written from: the course's slice for the by-course models, the
+    whole fact for the global ones.  A model with no rows for the course
+    (device_health_errors: no fixture battery reading is below 20) gets
+    no observed metrics row, so it reaches _write_observed's fallback:
+    recorded as 0, with a warning."""
+    lake, _ = lake_with_gold
+    with caplog.at_level(logging.WARNING, logger="tagmarshal_data_lakehouse_spark.gold.models"):
+        written = incremental_update(spark, lake, ["course_b"])
+
+    fact = lake.read("silver.fact_telemetry_event")
+    builder = GoldBuilder(spark, cache_fact_rounds=False)
+    expected = {}
+    for scope, globals_ in ((fact.filter(F.col("course_id") == "course_b"), False), (fact, True)):
+        built = builder.build(scope)
+        for model in MODELS:
+            if bool(model.combine) == globals_:
+                expected[model.name] = built[model.name].count()
+    assert written == expected
+    assert expected["device_health_errors"] == 0
+    assert any(
+        "observed write metrics unavailable for an empty result" in r.getMessage()
+        for r in caplog.records
+    )
 
 
 # A fresh driver that hands out CTE ids 0-5 before the gold build: with

@@ -93,3 +93,13 @@ def test_extra_java_options_merge_with_object_store():
     assert merged["spark.foo"] == "bar"
     # plain keys still overlay base values
     assert merge_conf({"a": "1"}, {"a": "2"})["a"] == "2"
+
+
+def test_driver_jvm_runs_one_c2_compiler_thread(spark):
+    """get_spark caps the driver's JIT at one C1 + one C2 thread: on a
+    4-core box HotSpot's default of 1 + 2 spent about a quarter of a
+    run's CPU compiling (session.py docstring).  Read off the live
+    JVM's arguments, so the flag is pinned where it takes effect."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = list(mx.getRuntimeMXBean().getInputArguments())
+    assert "-XX:CICompilerCount=2" in args
