@@ -31,6 +31,27 @@ places before ``spark.driver.extraJavaOptions``; HotSpot takes the
 last occurrence of a flag, so a caller restores more compiler threads
 with a later ``-XX:CICompilerCount=N`` in
 ``extra_conf={"spark.driver.extraJavaOptions": ...}``.
+
+Python posture: PySpark call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``).  PySpark 4.1
+wraps every ``Column`` method and ``F.col`` so that, with the flag at
+its default ``true``, each call walks the Python stack and makes about
+seven extra JVM calls (the active session, a reflection lookup of
+``PySparkCurrentOrigin``, a conf read, its ``set`` and ``clear``) to
+tag errors with the Python line that built the failing expression.
+Over one silver course-day refresh of 10 rounds that capture was
+2,960 of the 4,311 py4j commands the calling thread sent; with it off,
+and the landing projection as one ``selectExpr``
+(``storage.Lakehouse.align_to_schema``), the calling thread sends
+1,035, and about 1,400 go out in all (SCALE.md, "py4j round trips per
+refresh (4 cores)").  Plans and results do not change; only error
+messages lose the Python call site.
+To debug with call sites, pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
+PySpark reads the flag once per process, at the first wrapped Column
+call made while a session is active, and caches it; so it has to be
+set when the session is built, and a later ``spark.conf.set`` has no
+effect on a process that already built a Column.
 """
 
 from __future__ import annotations
@@ -200,6 +221,9 @@ def get_spark(
         # one C2 compiler thread (see the module docstring); a caller's
         # extraJavaOptions come after this and win
         .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
+        # no Python call-site capture on Column calls (see the module
+        # docstring); extra_conf can turn it back on
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)

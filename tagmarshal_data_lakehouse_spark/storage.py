@@ -35,6 +35,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,9 +48,8 @@ def _link_tree(src: str, dst: str) -> None:
     """Snapshot-copy a table directory: parquet data files HARDLINK
     (write-once — a later dynamic-partition overwrite unlinks them from
     the live dir but never mutates the inode), while metadata files
-    (`_engine_schema.json`, `_SUCCESS`, …) are COPIED — `_save_schema`
-    rewrites its file IN PLACE, and a hardlinked copy would silently
-    follow every future schema change instead of freezing this one."""
+    (`_engine_schema.json`, `_SUCCESS`, …) are COPIED, so the snapshot
+    owns them whatever a later writer does to the live ones."""
     for walk_root, _dirs, files in os.walk(src):
         rel = os.path.relpath(walk_root, src)
         out_dir = dst if rel == "." else os.path.join(dst, rel)
@@ -60,6 +60,47 @@ def _link_tree(src: str, dst: str) -> None:
                 shutil.copy2(s, d)
             else:
                 os.link(s, d)
+
+
+def _dump_json_atomic(path: str, doc) -> None:
+    """Write `doc` as JSON to `path` so that a reader sees the old file or
+    the new one, never a torn one: the text goes to a temp file in the
+    same directory, which `os.replace` then renames over `path` (atomic
+    on POSIX).  A failed write removes the temp file and leaves `path`
+    as it was.  The temp name starts with `path`'s basename, so for
+    table metadata it starts with `_`, which Spark's file listing and
+    `Lakehouse.exists` skip."""
+    tmp = f"{path}.{os.getpid()}-{threading.get_ident()}.tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(doc, fh)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+def _quote(name: str) -> str:
+    """`name` as a SQL identifier: backticks around it, inner ones doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """`dt` as a SQL type string.  `simpleString()` except inside a
+    struct, whose field names are quoted and whose non-nullable fields
+    keep `NOT NULL`.  Element and value nullability of arrays and maps
+    have no SQL spelling: a cast to such a type yields nullable ones."""
+    if isinstance(dt, T.StructType):
+        fields = (
+            f"{_quote(f.name)}:{_sql_type(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
+            for f in dt.fields
+        )
+        return f"struct<{','.join(fields)}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_sql_type(dt.keyType)},{_sql_type(dt.valueType)}>"
+    return dt.simpleString()
 
 
 class Lakehouse:
@@ -111,8 +152,7 @@ class Lakehouse:
                 new = T.StructType(
                     list(old.fields) + [f for f in new.fields if f.name not in have]
                 )
-        with open(self._schema_file(table), "w") as fh:
-            fh.write(new.json())
+        _dump_json_atomic(self._schema_file(table), new.jsonValue())
 
     # -- snapshot versioning (time travel) ---------------------------------
 
@@ -139,10 +179,12 @@ class Lakehouse:
         log = self._snap_log(table)
         v = (log[-1]["version"] + 1) if log else 1
         src, dst = self.path(table), os.path.join(self._snap_root(table), f"v{v}")
+        # a v{N} with no log entry is what a crash before the log write
+        # left behind: replace it
+        shutil.rmtree(dst, ignore_errors=True)
         _link_tree(src, dst)
         log.append({"version": v, "ts": time.time(), "op": op})
-        with open(self._snap_log_file(table), "w") as fh:
-            json.dump(log, fh)
+        _dump_json_atomic(self._snap_log_file(table), log)
         return v
 
     def history(self, table: str) -> DataFrame:
@@ -217,18 +259,28 @@ class Lakehouse:
     def align_to_schema(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Project df onto `schema`: cast known columns, null-fill missing,
         drop unknown extras (the reference's pre-append alignment,
-        etl.py:654-673).  A column that already has its declared type is
-        passed through uncast: every Column call is a JVM round trip, and
-        a fact row has ~50 fields."""
+        etl.py:654-673).
+
+        The projection is one `selectExpr` of SQL strings: a column that
+        already has its declared type passes through as its quoted name,
+        any other becomes `CAST(<col> AS <type>) AS <col>`, and a missing
+        one `CAST(NULL AS <type>) AS <col>`.  A list of N strings crosses
+        to the JVM in N+4 py4j commands and makes no JVM object per
+        field, where a `Column` per field cost about four commands each
+        (a fact row has ~50 fields; SCALE.md, "py4j round trips per
+        refresh").  Names are backtick-quoted, so a `.` or a backtick in
+        a column name is taken literally, not as a struct path.  The
+        analyzed plan is the one the Column form built."""
         have = {f.name: f.dataType for f in df.schema.fields}
-        cols = []
+        exprs = []
         for field in schema.fields:
+            name = _quote(field.name)
             if have.get(field.name) == field.dataType:
-                cols.append(F.col(field.name))
+                exprs.append(name)
             else:
-                src = F.col(field.name) if field.name in have else F.lit(None)
-                cols.append(src.cast(field.dataType).alias(field.name))
-        return df.select(*cols)
+                src = name if field.name in have else "NULL"
+                exprs.append(f"CAST({src} AS {_sql_type(field.dataType)}) AS {name}")
+        return df.selectExpr(*exprs)
 
     @staticmethod
     def _cluster_for_write(df: DataFrame, partition_by: list[str]) -> DataFrame:

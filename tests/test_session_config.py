@@ -103,3 +103,37 @@ def test_driver_jvm_runs_one_c2_compiler_thread(spark):
     mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
     args = list(mx.getRuntimeMXBean().getInputArguments())
     assert "-XX:CICompilerCount=2" in args
+
+
+def test_call_site_capture_is_off(spark, monkeypatch):
+    """get_spark turns off PySpark's call-site capture, which costs about
+    seven JVM calls per Column call (session.py docstring).  PySpark
+    caches the flag per process, so the cache is cleared first and the
+    flag read afresh from the active session."""
+    from pyspark.errors import utils
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert utils.is_debugging_enabled() is False
+
+
+def test_extra_conf_turns_call_site_capture_back_on(spark, monkeypatch):
+    """A caller's extra_conf wins over the constant in the builder conf.
+    getOrCreate is replaced by a probe that records the builder's options
+    and hands back the running session, so no second driver starts."""
+    from pyspark.sql import SparkSession
+
+    from tagmarshal_data_lakehouse_spark.session import get_spark
+
+    seen: dict[str, str] = {}
+
+    def probe(builder):
+        seen.update(builder._options)
+        return spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", probe)
+    get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"})
+    assert seen["spark.python.sql.dataFrameDebugging.enabled"] == "true"
+    seen.clear()
+    get_spark()
+    assert seen["spark.python.sql.dataFrameDebugging.enabled"] == "false"

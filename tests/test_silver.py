@@ -4,8 +4,10 @@ ports the reference's unit/integration/dbt-test coverage (SURVEY §5)."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
 from tagmarshal_data_lakehouse_spark import silver
@@ -277,3 +279,39 @@ def test_run_silver_releases_cache_on_failed_write(
             spark, lake, f"{fixture_dir}/json_mongo", "bradshawfarmgc", "2024-02-01"
         )
     assert _persisted_rdds(spark) == before
+
+
+@pytest.mark.parametrize(
+    "fixture,course,budget",
+    [
+        # measured 950, 1,034 and 1,556 (3,524, 4,278 and 6,138 before);
+        # budgets about 25% above
+        ("json_plain", "americanfalls", 1200),
+        ("json_mongo", "bradshawfarmgc", 1300),
+        ("csv_ragged", "indiancreek", 1950),
+    ],
+)
+def test_run_silver_py4j_round_trip_budget(
+    spark, fixture_dir, tmp_path, monkeypatch, fixture, course, budget
+):
+    """The py4j commands one course-day refresh sends from the calling
+    thread stay within budget: call-site capture off and the landing
+    projection as one selectExpr took a 10-round refresh from 4,311 to
+    1,035 (SCALE.md, "py4j round trips per refresh").  Reference
+    releases (`m`) are not counted: py4j's finalizer thread sends them
+    when Python frees a JVM proxy, so they depend on when the garbage
+    collector runs."""
+    caller = threading.get_ident()
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if threading.get_ident() == caller and not command.startswith("m\n"):
+            sent.append(command)
+        return send(self, command)
+
+    lake = Lakehouse(spark, str(tmp_path / "warehouse"))
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    silver.run_silver(spark, lake, f"{fixture_dir}/{fixture}", course, "2024-01-16")
+    monkeypatch.undo()
+    assert len(sent) <= budget

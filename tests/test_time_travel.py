@@ -5,10 +5,14 @@ non-destructively, vacuum expires with the audit trail intact."""
 
 from __future__ import annotations
 
+import errno
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
 
+from tagmarshal_data_lakehouse_spark import storage
 from tagmarshal_data_lakehouse_spark.storage import Lakehouse
 
 
@@ -114,3 +118,51 @@ def test_cli_snapshots_and_restore(spark, tmp_path, capsys):
     assert main(base + ["restore", "dims/topo", "1"]) == 0
     assert "restored dims/topo to v1" in capsys.readouterr().out
     assert [(r["k"], r["v"]) for r in lake.read("dims/topo").collect()] == [(1, "a")]
+
+
+def _tear_writes(monkeypatch) -> None:
+    """Every file `storage` opens for writing takes half of its first
+    write and then fails, as on a full disk or a crash mid-write."""
+    real_open = open
+
+    def torn_open(path, mode="r", *args, **kwargs):
+        fh = real_open(path, mode, *args, **kwargs)
+        if "w" in mode:
+            write = fh.write
+
+            def torn(text):
+                write(text[: len(text) // 2])
+                fh.flush()
+                raise OSError(errno.ENOSPC, "No space left on device")
+
+            fh.write = torn
+        return fh
+
+    monkeypatch.setattr(storage, "open", torn_open, raising=False)
+
+
+def test_torn_metadata_write_keeps_previous_files(spark, lake, monkeypatch):
+    """A write of `_log.json` or `_engine_schema.json` that fails halfway
+    leaves the previous file whole and no temp file behind, and the next
+    mutation of the table succeeds."""
+    t = "dim"
+    lake.overwrite(t, spark.createDataFrame([(1, "a")], "k long, v string"))
+    lake.overwrite(t, spark.createDataFrame([(2, "b")], "k long, v string"))
+    log, schema = lake._snap_log(t), lake._load_schema(t)
+    assert [e["version"] for e in log] == [1]
+    wide = spark.createDataFrame([(3, "c", 1.5)], "k long, v string, extra double")
+    with monkeypatch.context() as m:
+        _tear_writes(m)
+        with pytest.raises(OSError):
+            lake._snapshot(t, "torn")
+        with pytest.raises(OSError):
+            lake._save_schema(t, wide)
+    assert lake._snap_log(t) == log
+    assert lake._load_schema(t) == schema
+    for d in (lake.path(t), lake._snap_root(t)):
+        assert not [f for f in os.listdir(d) if f.endswith(".tmp")]
+
+    lake.write_partitioned(t, wide, [], mode="append")
+    assert [e["op"] for e in lake._snap_log(t)] == ["overwrite", "write_partitioned(append)"]
+    assert sorted(r["k"] for r in lake.read_version(t, 2).collect()) == [2]
+    assert sorted((r["k"], r["extra"]) for r in lake.read(t).collect()) == [(2, None), (3, 1.5)]
